@@ -14,12 +14,17 @@ measured 8x inflation of `fingerprint`/`knn_bruteforce` when the
 the suite in round 1. So every query group runs in its own FRESH
 subprocess JVM:
 
-  * pipeline  — flagship extraction throughput + media_externalize
-                (the one suite query that runs the `_synth` Arrow stage)
+  * pipeline  — flagship extraction throughput + the suite queries that
+                run the `_synth` Arrow stage (media, overlays)
   * text      — corpus text analysis (token/lang/quality/fingerprint/...)
   * dedup     — exact + minhash/LSH/simhash dedup family
   * sim       — embedding similarity (knn/ANN/cosine near-dup) + multimodal
   * rel       — relational/window/pages/bbox suite
+  * stream    — micro-batch replays of the streaming surface
+
+The groups, their members and their run order come from the `group`
+column of `__spark_entry__.query_table()`, the one list of gate queries:
+adding a gate query means adding one row there, and nothing here.
 
 JVM startup, warmup, and corpus synthesis are excluded from the timings;
 only the query execution (best-of-2) is timed, so the reported numbers
@@ -38,106 +43,17 @@ _REPO = os.path.dirname(os.path.abspath(__file__))
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
-# Suite groups (every non-pipeline key of __spark_entry__.queries() must
-# appear in exactly one group; checked at runtime in main()).
-GROUPS: dict[str, list[str]] = {
-    "text": [
-        "token_stats", "token_entropy", "lang_id", "quality_score", "fingerprint",
-        "lang_stats", "corpus_curation", "gopher_quality", "readability",
-        "code_detect", "dup_ngrams",
-        "repetition_ladder",
-        "pii_scrub", "corpus_stats", "corpus_rollup", "texttiling",
-        "decontaminate",
-        "fuzzy_decontaminate",
-        "html_strip", "main_content", "top_ngrams", "pmi_pairs", "zipf_fit", "tfidf_topk",
-        "bm25_topk", "rrf_fusion", "text_normalize", "normalize_uplift",
-        "dehyphenate",
-        "stratified_sample", "weighted_sample", "pack_sequences",
-        "token_budget_select", "pack_efficiency", "mm_pack",
-        "shard_manifest",
-        "cms_heavy_hitters", "kmv_distinct", "kmv_source_overlap",
-        "hll_distinct", "hist_quantiles",
-        "bpe_pair_counts",
-        "source_length_quantiles",
-        "langid_confusion", "lm_score", "ccnet_buckets", "segment_ppl", "lm2_score", "source_drift", "source_lang_entropy", "heldout_ppl",
-        "nb_langid", "nb_top_features", "labeler_kappa",
-        "tok_fertility",
-        "extract_links", "link_pagerank", "link_hits", "anchor_text_agg",
-        "link_cocitation", "link_components",
-        "url_normalize", "domain_stats", "robots_filter",
-        "crawl_frontier", "domain_quality", "data_split", "split_by_domain",
-        "split_ks",
-        "bloom_decontaminate", "mixture_weights", "temperature_mixture",
-        "dsir_weights", "dsir_select",
-        "adaptive_quality", "mojibake_census", "vocab_growth",
-        "filter_ablation", "badwords_filter",
-    ],
-    "dedup": [
-        # pure-scan queries first; the LSH family fills the persisted
-        # shingle table and runs after them. curation_funnel composes
-        # quality + decontamination + the memoized cluster table, so it
-        # runs last where the clusters are already warm.
-        "dedup_exact", "template_dedup", "bow_dedup", "seg_dedup",
-        "dup_passages", "dup_passages_apply",
-        "winnow_fingerprint", "winnow_overlap", "cdc_segments",
-        "cdc_dup_chunks",
-        "simhash", "simhash_neardup",
-        "minhash_signatures",
-        "lsh_buckets",
-        "neardup_pairs", "crossdedup_lsh", "minhash_est_error",
-        "neardup_transitivity", "minhash_oph",
-        "dedup_agreement",
-        "neardup_edit", "lsh_scurve",
-        "dedup_clusters",
-        "jaccard_pairs", "containment_pairs", "shingle_novelty",
-        "source_overlap", "cluster_size_hist", "cluster_density", "dedup_savings",
-        "dedup_savings_by_source", "split_leakage",
-        "curation_funnel", "quality_calibration", "cluster_keeper_quality",
-        "compaction_plan",
-    ],
-    "sim": [
-        # multimodal first: they are cheap Arrow-stage queries and must
-        # not pay for the similarity family's persisted tables
-        "decode_features", "media_resize", "frame_sample", "media_dedup",
-        "knn_bruteforce", "lsh_bucket_stats", "ann_lsh_topk",
-        "ann_lsh_multiprobe",
-        "ann_ivf_topk", "ann_recall", "ivf_cluster_stats", "cluster_purity",
-        "kmeans_step",
-        "cluster_topics",
-        "pq_encode",
-        "pq_search", "ivfpq_search", "pq_recall", "neardup_cosine",
-        "semdedup_clusters", "hard_negatives", "label_cohesion",
-        "emb_dim_stats", "emb_covariance", "emb_norm_hist", "emb_pca_var",
-        "emb_quantize_int8", "bitext_mine",
-        "emb_outliers", "coreset_kcenter", "split_emb_drift",
-    ],
-    "rel": [
-        "bbox_ops", "page_cells_in_bbox", "page_crop_text",
-        "page_textlines", "page_render_svg", "page_reading_order",
-        "page_xycut_blocks", "page_ocr_quality", "page_furniture",
-        "page_table_detect",
-        "tpch_q1", "tpch_q3", "tpch_q4", "tpch_q5", "tpch_q6",
-        "top_customers", "events_by_type",
-        "events_sessionize", "events_asof", "events_range_join",
-        "events_retention", "events_funnel", "events_spikes",
-        "orders_running_total",
-        "supplier_rank", "zorder_layout", "table_stats", "jsonl_roundtrip",
-        "merge_plan",
-    ],
-    "stream": [
-        # deterministic micro-batch replays of the streaming surface:
-        # each runs N_BATCHES sequential AvailableNow drains against a
-        # shared checkpoint, so wall time is dominated by per-drain
-        # stream startup, not data volume
-        "stream_dedup_replay", "stream_windowed_replay",
-        "stream_sessionize_replay", "stream_enrich_replay",
-    ],
-}
-# Runs inside the pipeline subprocess (it is the only suite query that
-# executes the `_synth` mapInPandas stage; isolating it keeps its Arrow
-# python-worker pressure away from the JVM-side suite groups).
-PIPELINE_SUITE = ["media_externalize", "media_captions",
-                  "doc_render_overlay", "doc_table_cells_overlay"]
+def _groups() -> dict[str, list[str]]:
+    """Benched query names per fresh-JVM group, groups and queries in
+    run order: the `group` column of __spark_entry__.query_table(), its
+    `gate` rows (covered by the flagship) left out."""
+    import __spark_entry__ as E
+
+    groups: dict[str, list[str]] = {}
+    for q in E.query_table():
+        if q.group != "gate":
+            groups.setdefault(q.group, []).append(q.name)
+    return groups
 
 
 def build_spark(cpus: int):
@@ -293,7 +209,7 @@ def _pipeline_main():
     pipe = bench_pipeline(spark, n_docs * 10, cpus)
     q = E.queries()
     timed = {name: _time_query(spark, q[name], sf_dir)
-             for name in PIPELINE_SUITE}
+             for name in _groups()["pipeline"]}
     print("PIPEJSON:" + json.dumps({
         "pipeline": pipe,
         "queries": {n: t[0] for n, t in timed.items()},
@@ -313,7 +229,7 @@ def _group_main(group: str):
 
     q = E.queries()
     timed = {name: _time_query(spark, q[name], sf_dir)
-             for name in GROUPS[group]}
+             for name in _groups()[group]}
     print("GROUPJSON:" + json.dumps({
         "queries": {n: t[0] for n, t in timed.items()},
         "host_ctl": {n: t[1] for n, t in timed.items()},
@@ -347,16 +263,8 @@ def main():
     sf_dir, cpus = _env()
     sf = sf_dir.rstrip("/").split("sf")[-1]
 
-    # coverage check: every suite query is benched exactly once
-    import __spark_entry__ as E
-
-    all_names = [n for n in E.queries() if not n.startswith("pipeline_")]
-    grouped = PIPELINE_SUITE + [n for g in GROUPS.values() for n in g]
-    missing = sorted(set(all_names) - set(grouped))
-    extra = sorted(set(grouped) - set(all_names))
-    if missing or extra:
-        raise RuntimeError(f"bench groups out of sync: "
-                           f"missing={missing} extra={extra}")
+    groups = _groups()
+    grouped = [n for names in groups.values() for n in names]
 
     q_times: dict[str, float] = {}
     host_ctl: dict[str, float] = {}
@@ -373,7 +281,9 @@ def main():
         "n_queries": len(pipe_res["queries"]) + 1,  # + flagship extract
         "sec": round(sum(pipe_res["queries"].values()) + pipe["sec"], 3),
     }
-    for group in GROUPS:
+    for group in groups:
+        if group == "pipeline":
+            continue
         res = _run_subprocess(["--group", group], "GROUPJSON:")
         q_times.update(res["queries"])
         host_ctl.update(res["host_ctl"])

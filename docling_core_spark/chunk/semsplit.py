@@ -104,6 +104,11 @@ def semsplit_chunk(
             attached = piece
         if token_counter(attached) > chunk_size:
             flush()
+            if not splitter:
+                # a single character: nothing finer to split into, so
+                # it goes out over budget instead of recursing forever
+                out.append(piece)
+                continue
             out.extend(
                 semsplit_chunk(piece, chunk_size, token_counter,
                                _depth + 1)

@@ -274,12 +274,15 @@ def layout_doc_ids(n: int) -> List[str]:
 # Per-(app, n_docs) memo of the parsed flattens: the two overlay gate
 # rows and best-of-2 bench attempts would otherwise re-run the Python
 # doctags parse over the whole corpus per call (the session-memoized
-# result-table pattern of corpus/dedup.py's shingle tables). Dropped
-# WITHOUT unpersist on clear — freeing under a live consumer breaks it.
+# result-table pattern of corpus/dedup.py's shingle tables).
 _LAYOUT_CACHE: dict = {}
 
 
 def clear_caches() -> None:
+    """Unpersist and drop every memoized flatten. Called between sf
+    dirs (corpus.clear_all_caches), where no consumer is live."""
+    for df in _LAYOUT_CACHE.values():
+        df.unpersist()
     _LAYOUT_CACHE.clear()
 
 

@@ -211,10 +211,11 @@ def _rule_errors(obj: dict) -> List[str]:
         )
         if n_core != 1:
             bad.append("version")
-    # reference_for_document (meta.py:68-79)
+    # reference_for_document (meta.py:68-79): a falsy $ref is coerced
+    # to the pinned value, only a truthy wrong one is rejected
     if obj.get("type") == "Document":
         ref = obj.get("$ref")
-        if ref is not None and ref != "ccs:schemas#/Document":
+        if ref and ref != "ccs:schemas#/Document":
             bad.append("$ref")
     return bad
 

@@ -56,3 +56,17 @@ def test_rotation_names_exist():
     q = set(m.queries())
     ghost = [k for k in m._DRIVER_WINDOW_ORDER if k not in q]
     assert ghost == [], f"rotation references unknown queries: {ghost}"
+
+
+def test_queries_evaluates_no_oracle(monkeypatch):
+    """queries() runs inside the dedup benchmark's timed chain, so it
+    must not build any oracle SQL: a raising sql_* function is never
+    reached."""
+    from docling_core_spark.corpus import dedup as CD
+
+    def boom():
+        raise AssertionError("queries() evaluated an oracle")
+
+    monkeypatch.setattr(CD, "sql_minhash_signatures", boom)
+    m = _entry()
+    assert "minhash_signatures" in m.queries()

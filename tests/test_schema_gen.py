@@ -12,16 +12,20 @@ text are not compared — the semantic structure is.
 """
 
 import json
+import os
 
 import pytest
 
 from docling_core_spark.model.schema_gen import generate_docling_schema
 
 REF_SCHEMA_PATH = "/root/reference/docs/DoclingDocument.json"
+_MISSING = f"reference schema missing: {REF_SCHEMA_PATH}"
 
 
 @pytest.fixture(scope="module")
 def ref_schema():
+    if not os.path.exists(REF_SCHEMA_PATH):
+        pytest.skip(_MISSING)
     with open(REF_SCHEMA_PATH) as f:
         return json.load(f)
 
@@ -77,6 +81,10 @@ def test_defs_set_matches(ref_schema, our_schema):
 
 
 def _def_names():
+    """The reference's $defs names, or one skipped case naming the
+    missing file."""
+    if not os.path.exists(REF_SCHEMA_PATH):
+        return [pytest.param(None, marks=pytest.mark.skip(reason=_MISSING))]
     with open(REF_SCHEMA_PATH) as f:
         return sorted(json.load(f)["$defs"])
 

@@ -193,6 +193,22 @@ def test_valid_base_accepted():
     assert ok, msg
 
 
+def test_document_ref_falsy_accepted():
+    """reference_for_document (meta.py:68-79) coerces a falsy $ref to
+    the pinned value and rejects only a truthy wrong one."""
+    base = {
+        "created": "2023-08-15T10:00:00Z",
+        "source": "ccs",
+        "type": "Document",
+        "version": [{"name": "docling-core", "version": "2.34.1"}],
+    }
+    for ref, expect in (("", True), ("ccs:schemas#/Document", True),
+                        ("x", False)):
+        payload = json.dumps({**base, "$ref": ref})
+        ok, msg = validate_meta(payload, TAXONOMY, DOMAIN)
+        assert ok is expect, f"$ref={ref!r}: {msg}"
+
+
 def test_distributed_validation(spark):
     from docling_core_spark.search.meta_schema import validate_meta_docs
 

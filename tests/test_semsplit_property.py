@@ -49,6 +49,18 @@ def test_content_preserved(words, budget):
     assert bag("".join(out)) == bag(text)
 
 
+def test_over_budget_single_characters_terminate():
+    """A counter that prices every string above the budget (e.g. one
+    adding a special token) leaves single characters over budget: they
+    are emitted as they are, nothing recurses forever or goes missing."""
+    def counter(s):
+        return len(s) + 1
+
+    for text in ("abcdef", "héllo wörld", "x"):
+        out = semsplit_chunk(text, 1, counter)
+        assert "".join(out) == text.replace(" ", "")
+
+
 @settings(max_examples=100, deadline=None)
 @given(st.text(alphabet="ab.\n\t ?", min_size=1, max_size=80))
 def test_split_text_reconstructs(text):
