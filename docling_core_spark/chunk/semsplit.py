@@ -9,11 +9,13 @@ semchunk, MIT — re-implemented from the published description, not
 copied):
 
   1. split the text with the most semantically meaningful splitter
-     present: the largest run of newlines/carriage returns, else the
-     largest run of tabs, else the largest whitespace run, else the
-     first present non-whitespace splitter in a fixed preference order
-     (sentence terminators, clause separators, sentence interrupters,
-     word joiners), else individual characters;
+     present: a run of newlines/carriage returns, else a run of tabs,
+     else a whitespace run, else the first present non-whitespace
+     splitter in a fixed preference order (sentence terminators,
+     clause separators, sentence interrupters, word joiners), else
+     individual characters. Among runs of one class the code takes
+     plain `max()`: the lexicographically greatest run, not the
+     longest (a CR LF pair beats three LFs);
   2. recursively split any piece that exceeds the token budget;
   3. greedily merge adjacent pieces back together while the merged
      chunk stays within the budget (joined by the splitter so a merged
@@ -60,7 +62,9 @@ _WS_RUN = re.compile(r"\s+")
 
 def _split_text(text: str):
     """(splitter, splitter_is_whitespace, splits) — most semantically
-    meaningful splitter present in `text`."""
+    meaningful splitter present in `text`. Within a run class the
+    splitter is the lexicographically greatest run (plain `max()`),
+    not the longest: a CR LF pair is chosen over three LFs."""
     if "\n" in text or "\r" in text:
         splitter = max(_NL_RUN.findall(text))
         return splitter, True, text.split(splitter)

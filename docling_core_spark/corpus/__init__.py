@@ -29,19 +29,6 @@ def artifact_path(sf_dir: str, prefix: str) -> str:
     return os.path.join(repo, "goldens", f"{prefix}_sf{sf}.json")
 
 
-def clear_all_caches() -> None:
-    """Drop every per-(app, sf) persisted-DataFrame cache in the corpus
-    package (dedup, similarity, keywords, cohesion). A long-lived session
-    iterating sf dirs must call this between dirs or the persisted
-    DataFrames strand executor storage; single aggregate entry point so
-    cleanup sites can't miss a module."""
-    from . import cohesion, dedup, keywords, similarity
-    from ..ops import overlay
-
-    for mod in (dedup, similarity, keywords, cohesion, overlay):
-        mod.clear_caches()
-
-
 def read_spread(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     """Read a parquet table and make sure the scan's parallelism covers
     the cluster. A production-scale table has thousands of row-group

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..artifacts import Memo
 from . import constants as C, read_spread
 
 
@@ -687,18 +688,8 @@ def sql_emb_outliers() -> str:
 
 KCENTER_K = 8
 
-# memoized per-(session, sf) integerised embedding projection (same
-# leak discipline as dedup.clear_caches)
-_KCENTER_CACHE: dict = {}
-
-
-def clear_caches() -> None:
-    for df in _KCENTER_CACHE.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # owning SparkContext already stopped
-    _KCENTER_CACHE.clear()
+# memoized per-(session, sf) integerised embedding projection
+_MEMO = Memo("cohesion")
 
 
 def _md_spark() -> str:
@@ -752,14 +743,12 @@ def q_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
     the K selected rows, never corpus data). No |corpus| x |corpus|
     distance matrix ever forms. Reference analog: none
     (SURVEY.md §2.8)."""
-    key = (spark.sparkContext.applicationId, sf_dir, "kcenter_md")
-    if key not in _KCENTER_CACHE:
-        df = read_spread(spark, sf_dir, "embeddings").select(
+    e = _MEMO.fetch(
+        spark, sf_dir, "kcenter_md",
+        build=lambda: read_spread(spark, sf_dir, "embeddings").select(
             "vec_id", F.expr(_md_spark()).alias("md")
-        ).persist()
-        df.count()
-        _KCENTER_CACHE[key] = df
-    e = _KCENTER_CACHE[key]
+        ),
+    )
 
     def lit_md(vals):
         return "array(" + ", ".join(f"{v}L" for v in vals) + ")"

@@ -24,6 +24,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..artifacts import Memo, clear
 from . import constants as C, read_spread
 from .textstats import TOKENS_DUCK, TOKENS_SPARK, _h30_duck, _h30_spark
 
@@ -82,49 +83,21 @@ def _shingles_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 # One persisted shingle table per (session, sf_dir): the in-session
 # analog of materializing the signature table to storage, which is what
 # a 100 TB run would do (compute shingles/signatures exactly once, then
-# band + verify from the materialized table). Memoizing also prevents
-# repeated calls from stacking fresh .persist() copies.
-_SHINGLE_CACHE: dict = {}
-# verified near-dup pairs, memoized per (session, sf_dir) like the
-# shingle table: the second table a production dedup run materializes —
-# downstream consumers (connected-component clustering, curation) read
-# it instead of re-running the LSH + Jaccard chain
-_PAIRS_CACHE: dict = {}
-# the cluster assignment (doc_id -> canonical), memoized likewise: the
-# keep/drop list IS the final artifact a dedup job writes to storage
-_CLUSTERS_CACHE: dict = {}
-
-
-def clear_caches() -> None:
-    """Unpersist + forget the memoized shingle/pairs tables. Dropping
-    dict entries WITHOUT unpersisting leaks the cached RDDs in the
-    executor storage pool — enough leaked copies push later persists
-    into eviction/spill (measured a 20x slowdown after two leaked fills
-    of a 16x-inflated corpus)."""
-    for cache in (_SHINGLE_CACHE, _PAIRS_CACHE, _CLUSTERS_CACHE):
-        for df in cache.values():
-            try:
-                df.unpersist()
-            except Exception:
-                pass  # owning SparkContext already stopped
-        cache.clear()
+# band + verify from the materialized table).
+_SHINGLE_CACHE = Memo("dedup.shingles")
+# verified near-dup pairs: the second table a production dedup run
+# materializes — downstream consumers (connected-component clustering,
+# curation) read it instead of re-running the LSH + Jaccard chain
+_PAIRS_CACHE = Memo("dedup.pairs")
+# the cluster assignment (doc_id -> canonical): the keep/drop list IS
+# the final artifact a dedup job writes to storage
+_CLUSTERS_CACHE = Memo("dedup.clusters")
+clear_caches = clear  # the name perfbench and the dedup tests clear through
 
 
 def _persisted_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # applicationId, not id(sparkContext): CPython can reuse an id after
-    # the old context is garbage-collected (see similarity._cache_key)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _SHINGLE_CACHE:
-        df = _shingles_df(spark, sf_dir).persist()
-        # materialize EAGERLY: lazily-filled caches consumed by several
-        # branches of one job race to recompute the same partitions
-        # concurrently (measured 5x slowdown at 8 cores on a cold
-        # 16x-inflated corpus); one clean fill job removes the race —
-        # exactly the "materialize the signature table first" step a
-        # production run performs
-        df.count()
-        _SHINGLE_CACHE[key] = df
-    return _SHINGLE_CACHE[key]
+    return _SHINGLE_CACHE.fetch(
+        spark, sf_dir, build=lambda: _shingles_df(spark, sf_dir))
 
 
 def _sig_from_shingles(sh: DataFrame) -> DataFrame:
@@ -278,12 +251,9 @@ def q_neardup_pairs(
     read it rather than re-running the chain.
     """
     if max_bucket == 0:
-        key = (spark.sparkContext.applicationId, sf_dir)
-        if key not in _PAIRS_CACHE:
-            df = _compute_neardup_pairs(spark, sf_dir, 0).persist()
-            df.count()  # eager fill, same reason as _persisted_shingles
-            _PAIRS_CACHE[key] = df
-        return _PAIRS_CACHE[key]
+        return _PAIRS_CACHE.fetch(
+            spark, sf_dir,
+            build=lambda: _compute_neardup_pairs(spark, sf_dir, 0))
     return _compute_neardup_pairs(spark, sf_dir, max_bucket)
 
 
@@ -534,28 +504,28 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     training-data extension surface); semantics follow the standard
     MinHash-LSH dedup recipe (Broder '97; GPL-free public description).
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _CLUSTERS_CACHE:
-        return _CLUSTERS_CACHE[key]
-    pairs = q_neardup_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    docs = read_spread(spark, sf_dir, "documents").select("doc_id")
+    return _CLUSTERS_CACHE.fetch(
+        spark, sf_dir,
+        build=lambda: _cluster_table(
+            read_spread(spark, sf_dir, "documents").select("doc_id"),
+            q_neardup_pairs(spark, sf_dir).select("doc_a", "doc_b"),
+        ),
+    )
+
+
+def _cluster_table(docs: DataFrame, pairs: DataFrame) -> DataFrame:
+    """(doc_id, cluster_id, cluster_size, is_canonical): the connected
+    components of `pairs` over `docs`, each led by its minimum id."""
     labels = _min_label_components(docs, pairs)
     sizes = labels.groupBy("cluster_id").agg(
         F.count("*").alias("cluster_size")
     )
-    out = (
-        labels.join(sizes, "cluster_id")
-        .select(
-            "doc_id",
-            "cluster_id",
-            "cluster_size",
-            (F.col("doc_id") == F.col("cluster_id")).alias("is_canonical"),
-        )
-        .persist()
+    return labels.join(sizes, "cluster_id").select(
+        "doc_id",
+        "cluster_id",
+        "cluster_size",
+        (F.col("doc_id") == F.col("cluster_id")).alias("is_canonical"),
     )
-    out.count()
-    _CLUSTERS_CACHE[key] = out
-    return out
 
 
 def _min_label_components(
@@ -2750,17 +2720,14 @@ def q_fuzzy_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("r")
     ).select(F.col("r.doc_id").alias("doc_id"), F.col("r.text").alias("text"))
     # the augmented shingle table fans into FOUR plan branches (two
-    # band sides + both verify joins); memoize-persist it in the same
-    # cache clear_caches() manages, or the corpus-wide
+    # band sides + both verify joins); memoize it, or the corpus-wide
     # tokenize+shingle subtree is recomputed per branch
-    key = (spark.sparkContext.applicationId, sf_dir, "fuzzy_aug")
-    if key not in _SHINGLE_CACHE:
-        df = aug.select(
+    sh = _SHINGLE_CACHE.fetch(
+        spark, sf_dir, "fuzzy_aug",
+        build=lambda: aug.select(
             "doc_id", F.expr(TOKENS_SPARK).alias("toks")
-        ).select("doc_id", F.expr(_shingles_spark()).alias("sh")).persist()
-        df.count()
-        _SHINGLE_CACHE[key] = df
-    sh = _SHINGLE_CACHE[key]
+        ).select("doc_id", F.expr(_shingles_spark()).alias("sh")),
+    )
     bands = _bands_from_sig(_sig_from_shingles(sh))
     tr_b = bands.where(f"NOT ({ev_pred})")
     ev_b = bands.where(ev_pred)

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..artifacts import Memo
 from . import constants as C, read_spread
 from .textstats import TOKENS_DUCK, TOKENS_SPARK, _h30_duck, _h30_spark
 
@@ -825,19 +826,8 @@ def sql_bpe_pair_counts() -> str:
 # ---------------------------------------------------------------------------
 
 # memoized per-(session, sf) distinct (source, gram-hash) table for the
-# overlap sketch (same leak discipline as dedup.clear_caches: dropping
-# entries WITHOUT unpersisting strands the cached RDDs in executor
-# storage)
-_SRC_HASH_CACHE: dict = {}
-
-
-def clear_caches() -> None:
-    for df in _SRC_HASH_CACHE.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # owning SparkContext already stopped
-    _SRC_HASH_CACHE.clear()
+# overlap sketch
+_MEMO = Memo("keywords")
 
 
 # per-(source, salt) bottom-K cut fan-out (same two-level discipline as
@@ -884,17 +874,14 @@ def q_kmv_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the distinct (source, h) table fans into FOUR plan branches
     # (sketch arm, sizes, and both sides of the exact self-join);
-    # memoize-persist it — the dedup-chain _persisted_shingles
-    # discipline — or the corpus-wide bigram explode + md5 hash is
+    # memoize it, or the corpus-wide bigram explode + md5 hash is
     # recomputed per branch (the self-join alone evaluates it twice)
-    key = (spark.sparkContext.applicationId, sf_dir, "kmv_src_h")
-    if key not in _SRC_HASH_CACHE:
-        df = grams.select(
+    sh = _MEMO.fetch(
+        spark, sf_dir, "kmv_src_h",
+        build=lambda: grams.select(
             "source", F.expr(_h30_spark("gram")).alias("h")
-        ).distinct().persist()
-        df.count()
-        _SRC_HASH_CACHE[key] = df
-    sh = _SRC_HASH_CACHE[key]
+        ).distinct(),
+    )
 
     # --- sketch arm: salted two-level bottom-K per source -------------
     salted = sh.withColumn(

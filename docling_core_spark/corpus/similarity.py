@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..artifacts import Memo
 from . import constants as C, read_spread
 
 # ---------------------------------------------------------------------------
@@ -126,12 +127,14 @@ def q_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("q_id").orderBy(
         F.col("cos_sim").desc(), F.col("neighbor_id")
     )
-    return _memo_result(
+    return _MEMO.fetch(
         spark, sf_dir, "res_knn",
-        joined.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= C.KNN_K)
-        .select("q_id", "neighbor_id", F.col("rnk").alias("rank"),
-                "cos_sim"),
+        build=lambda: (
+            joined.withColumn("rnk", F.row_number().over(w))
+            .filter(F.col("rnk") <= C.KNN_K)
+            .select("q_id", "neighbor_id", F.col("rnk").alias("rank"),
+                    "cos_sim")
+        ),
     )
 
 
@@ -160,44 +163,12 @@ def sql_knn_bruteforce() -> str:
 # LSH bucket assignment (banded)
 # ---------------------------------------------------------------------------
 
-_BANDED_CACHE: dict = {}
-
-
-def clear_caches() -> None:
-    """Unpersist + forget the memoized banded/IVF tables (same leak
-    discipline as dedup.clear_caches: dropping dict entries WITHOUT
-    unpersisting strands the cached RDDs in the executor storage pool)."""
-    for df in _BANDED_CACHE.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # owning SparkContext already stopped
-    _BANDED_CACHE.clear()
-
-
-def _memo_result(
-    spark: SparkSession, sf_dir: str, name: str, df: DataFrame
-) -> DataFrame:
-    """Session-memoize a SEARCH RESULT table (queries x top-K rows —
-    tiny). Production materializes each ranking once and evaluates
-    recall/monitoring queries against the stored table; the persist is
-    the in-query analog (same discipline as the shingle/pair tables in
-    dedup.py). Without it every recall query re-runs the full searcher
-    chain per consumer — measured 12.2 s ann_recall / 9.4 s pq_recall
-    at sf0.1 from exactly that re-evaluation."""
-    key = _cache_key(spark, sf_dir, name)
-    if key not in _BANDED_CACHE:
-        out = df.persist()
-        out.count()
-        _BANDED_CACHE[key] = out
-    return _BANDED_CACHE[key]
-
-
-def _cache_key(spark: SparkSession, *parts):
-    # applicationId, not id(sparkContext): CPython can reuse an id after
-    # the old context is garbage-collected, which would hand a later
-    # session a DataFrame bound to a stopped context.
-    return (spark.sparkContext.applicationId, *parts)
+# Every similarity artifact: the banded signature table, the IVF/PQ
+# index tables, the cosine pairs and clusters, and each SEARCH RESULT
+# table (queries x top-K rows — tiny), which recall queries re-read
+# instead of re-running the searcher chain (measured 12.2 s ann_recall
+# / 9.4 s pq_recall at sf0.1 without it).
+_MEMO = Memo("similarity")
 
 
 def _emb_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -210,19 +181,16 @@ def _emb_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     (~4.4 GB at sf0.1); the executor-storage pressure slowed every
     later query sharing the JVM. Persisted once per (session, sf) — at
     production scale this is the materialized signature table."""
-    key = _cache_key(spark, sf_dir)
-    if key not in _BANDED_CACHE:
-        e = _emb_df(spark, sf_dir)
-        bucket_arr = ", ".join(
-            _band_bucket_spark(b) for b in range(C.EMB_BANDS)
-        )
-        df = e.select(
+    bucket_arr = ", ".join(
+        _band_bucket_spark(b) for b in range(C.EMB_BANDS)
+    )
+    return _MEMO.fetch(
+        spark, sf_dir, "banded",
+        build=lambda: _emb_df(spark, sf_dir).select(
             "vec_id", "emb", "nrm",
             F.expr(f"array({bucket_arr})").alias("buckets"),
-        ).persist()
-        df.count()  # eager fill (see dedup._persisted_shingles)
-        _BANDED_CACHE[key] = df
-    return _BANDED_CACHE[key]
+        ),
+    )
 
 
 def _banded_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -323,12 +291,14 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("q_id").orderBy(
         F.col("cos_sim").desc(), F.col("neighbor_id")
     )
-    return _memo_result(
+    return _MEMO.fetch(
         spark, sf_dir, "res_lsh_topk",
-        joined.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= C.ANN_K)
-        .select("q_id", "neighbor_id", F.col("rnk").alias("rank"),
-                "cos_sim"),
+        build=lambda: (
+            joined.withColumn("rnk", F.row_number().over(w))
+            .filter(F.col("rnk") <= C.ANN_K)
+            .select("q_id", "neighbor_id", F.col("rnk").alias("rank"),
+                    "cos_sim")
+        ),
     )
 
 
@@ -413,12 +383,14 @@ def q_ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("q_id").orderBy(
         F.col("cos_sim").desc(), F.col("neighbor_id")
     )
-    return _memo_result(
+    return _MEMO.fetch(
         spark, sf_dir, "res_lsh_mp",
-        joined.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= C.ANN_K)
-        .select("q_id", "neighbor_id", F.col("rnk").alias("rank"),
-                "cos_sim"),
+        build=lambda: (
+            joined.withColumn("rnk", F.row_number().over(w))
+            .filter(F.col("rnk") <= C.ANN_K)
+            .select("q_id", "neighbor_id", F.col("rnk").alias("rank"),
+                    "cos_sim")
+        ),
     )
 
 
@@ -572,10 +544,49 @@ def ivf_centroids(spark: SparkSession, sf_dir: str) -> list:
     if os.path.exists(path):
         with open(path) as f:
             return json.load(f)["centroids"]
-    key = _cache_key(spark, sf_dir, "ivf_centroids")
-    if key not in _BANDED_CACHE:
-        _BANDED_CACHE[key] = compute_ivf_centroids(spark, sf_dir)
-    return _BANDED_CACHE[key]
+    return _MEMO.fetch(
+        spark, sf_dir, "ivf_centroids",
+        build=lambda: compute_ivf_centroids(spark, sf_dir))
+
+
+def _ivf_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Each vector's IVF_NPROBE nearest cells as (vec_id, cell, crnk).
+    Both the cell assignment and the probe lists of the IVF searches
+    derive from this ranking; memoized so the centroid-scoring cross
+    join runs once (at production scale this is the materialized
+    assignment table). Only the nprobe-truncated id triples are kept —
+    round 2 persisted the full n x K ranking WITH the 64-dim embeddings
+    (~9 GB at sf0.1), and that storage pressure slowed every query
+    sharing the executor; embeddings re-join from the cached signature
+    table at candidate scale instead."""
+    from pyspark.sql.window import Window
+
+    def build() -> DataFrame:
+        cents = spark.createDataFrame(
+            [(i, c) for i, c in enumerate(ivf_centroids(spark, sf_dir))],
+            "c_id int, c_emb array<double>",
+        ).withColumn("c_nrm", F.expr(f"sqrt({_norm2_spark('c_emb')})"))
+        scored = (
+            _cached_emb(spark, sf_dir).alias("s")
+            .crossJoin(F.broadcast(cents))
+            .select(
+                "s.vec_id", "c_id",
+                F.expr(
+                    f"round({_dot_spark('s.emb', 'c_emb')}"
+                    f" / (s.nrm * c_nrm), 6)"
+                ).alias("c_cos"),
+            )
+        )
+        wc = Window.partitionBy("vec_id").orderBy(
+            F.col("c_cos").desc(), F.col("c_id")
+        )
+        return (
+            scored.withColumn("crnk", F.row_number().over(wc))
+            .filter(F.col("crnk") <= IVF_NPROBE)
+            .select("vec_id", F.col("c_id").alias("cell"), "crnk")
+        )
+
+    return _MEMO.fetch(spark, sf_dir, "ivf_ranked", build=build)
 
 
 def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -589,44 +600,7 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     e = _cached_emb(spark, sf_dir)
-    cents = spark.createDataFrame(
-        [(i, c) for i, c in enumerate(ivf_centroids(spark, sf_dir))],
-        "c_id int, c_emb array<double>",
-    ).withColumn("c_nrm", F.expr(f"sqrt({_norm2_spark('c_emb')})"))
-    scored = (
-        e.alias("s")
-        .crossJoin(F.broadcast(cents))
-        .select(
-            "s.vec_id", "c_id",
-            F.expr(
-                f"round({_dot_spark('s.emb', 'c_emb')}"
-                f" / (s.nrm * c_nrm), 6)"
-            ).alias("c_cos"),
-        )
-    )
-    wc = Window.partitionBy("vec_id").orderBy(
-        F.col("c_cos").desc(), F.col("c_id")
-    )
-    # both the cell assignment and the probe list derive from this
-    # ranking; persist so the centroid-scoring cross join runs once
-    # (at production scale this is the materialized assignment table).
-    # Persist ONLY the nprobe-truncated id triples — round 2 persisted
-    # the full n x K ranking WITH the 64-dim embeddings (~9 GB at
-    # sf0.1), and that storage pressure slowed every query sharing the
-    # executor; embeddings re-join from the cached signature table at
-    # candidate scale instead. Memoized per (session, sf): repeated
-    # calls must not stack persisted copies.
-    ckey = _cache_key(spark, sf_dir, "ivf_ranked")
-    if ckey not in _BANDED_CACHE:
-        rc = (
-            scored.withColumn("crnk", F.row_number().over(wc))
-            .filter(F.col("crnk") <= IVF_NPROBE)
-            .select("vec_id", F.col("c_id").alias("cell"), "crnk")
-            .persist()
-        )
-        rc.count()  # eager fill (see dedup._persisted_shingles)
-        _BANDED_CACHE[ckey] = rc
-    ranked_cells = _BANDED_CACHE[ckey]
+    ranked_cells = _ivf_ranked(spark, sf_dir)
     assigned = ranked_cells.filter(F.col("crnk") == 1).select(
         "vec_id", "cell"
     )
@@ -659,13 +633,15 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("q_id").orderBy(
         F.col("cos_sim").desc(), F.col("neighbor_id")
     )
-    return _memo_result(
+    return _MEMO.fetch(
         spark, sf_dir, "res_ivf_topk",
-        joined.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= C.ANN_K)
-        .select(
-            "q_id", "cell", "neighbor_id", F.col("rnk").alias("rank"),
-            "cos_sim",
+        build=lambda: (
+            joined.withColumn("rnk", F.row_number().over(w))
+            .filter(F.col("rnk") <= C.ANN_K)
+            .select(
+                "q_id", "cell", "neighbor_id", F.col("rnk").alias("rank"),
+                "cos_sim",
+            )
         ),
     )
 
@@ -764,12 +740,9 @@ def q_neardup_cosine(
         # memoize the verified-pairs table per session (same rationale
         # as dedup._PAIRS_CACHE: it is the artifact a production run
         # materializes; semdedup clustering re-reads it)
-        key = _cache_key(spark, "cos_pairs", sf_dir)
-        if key not in _BANDED_CACHE:
-            df = _compute_neardup_cosine(spark, sf_dir, 0).persist()
-            df.count()
-            _BANDED_CACHE[key] = df
-        return _BANDED_CACHE[key]
+        return _MEMO.fetch(
+            spark, sf_dir, "cos_pairs",
+            build=lambda: _compute_neardup_cosine(spark, sf_dir, 0))
     return _compute_neardup_cosine(spark, sf_dir, max_bucket)
 
 
@@ -848,34 +821,19 @@ def q_semdedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     singleton clusters. Semantics follow the public SemDeDup recipe
     (Abbas et al. 2023: embed -> near-dup pairs -> components -> keep
     one per component), re-expressed as DataFrame ops."""
-    from .dedup import _min_label_components
+    from .dedup import _cluster_table
 
-    key = _cache_key(spark, "sem_clusters", sf_dir)
-    if key in _BANDED_CACHE:
-        return _BANDED_CACHE[key]
-    pairs = q_neardup_cosine(spark, sf_dir).select(
-        F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
+    return _MEMO.fetch(
+        spark, sf_dir, "sem_clusters",
+        build=lambda: _cluster_table(
+            read_spread(spark, sf_dir, "embeddings").select(
+                F.col("vec_id").alias("doc_id")
+            ),
+            q_neardup_cosine(spark, sf_dir).select(
+                F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
+            ),
+        ).withColumnRenamed("doc_id", "vec_id"),
     )
-    vecs = read_spread(spark, sf_dir, "embeddings").select(
-        F.col("vec_id").alias("doc_id")
-    )
-    labels = _min_label_components(vecs, pairs)
-    sizes = labels.groupBy("cluster_id").agg(
-        F.count("*").alias("cluster_size")
-    )
-    out = (
-        labels.join(sizes, "cluster_id")
-        .select(
-            F.col("doc_id").alias("vec_id"),
-            "cluster_id",
-            "cluster_size",
-            (F.col("doc_id") == F.col("cluster_id")).alias("is_canonical"),
-        )
-        .persist()
-    )
-    out.count()
-    _BANDED_CACHE[key] = out
-    return out
 
 
 def sql_semdedup_clusters() -> str:
@@ -1274,10 +1232,9 @@ def pq_codebooks(spark: SparkSession, sf_dir: str) -> list:
     if os.path.exists(path):
         with open(path) as f:
             return json.load(f)["codebooks"]
-    key = _cache_key(spark, sf_dir, "pq_codebooks")
-    if key not in _BANDED_CACHE:
-        _BANDED_CACHE[key] = compute_pq_codebooks(spark, sf_dir)
-    return _BANDED_CACHE[key]
+    return _MEMO.fetch(
+        spark, sf_dir, "pq_codebooks",
+        build=lambda: compute_pq_codebooks(spark, sf_dir))
 
 
 def _pq_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1301,43 +1258,58 @@ def q_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     a (vec_id, m)-partitioned window over PQ_KS rows per subvector —
     scan-shaped, no corpus shuffle. The emitted code table is the
     4-bytes-per-vector index a production deployment materializes — so
-    the engine memoizes it per session (persist in _BANDED_CACHE, the
+    the engine memoizes it per session (a `Memo` entry, the
     in-query analog of that materialization): pq_search, ivfpq_search
     and pq_recall all consume it, and without the pin each consumer
     re-runs the encode window over the corpus."""
     from pyspark.sql.window import Window
 
-    ckey = _cache_key(spark, sf_dir, "pq_codes")
-    if ckey in _BANDED_CACHE:
-        return _BANDED_CACHE[ckey]
-    e = _cached_emb(spark, sf_dir).select(
-        "vec_id", F.col("emb")
-    )
-    subs = _pq_subvecs(e)
-    w = Window.partitionBy("vec_id", "m").orderBy(
-        F.col("d").asc(), F.col("c_id").asc()
-    )
-    codes = (
-        subs.join(F.broadcast(_pq_cdf(spark, sf_dir)), "m")
-        .select(
-            "vec_id", "m", "c_id",
-            F.expr(_L2_SPARK.format(a="sub", b="c_sub")).alias("d"),
+    def build() -> DataFrame:
+        e = _cached_emb(spark, sf_dir).select(
+            "vec_id", F.col("emb")
         )
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            F.col("vec_id").cast("bigint").alias("vec_id"),
-            F.col("m").cast("bigint").alias("m"),
-            F.col("c_id").cast("bigint").alias("code"),
-            F.expr("cast(round(d * 1000000) as bigint)").alias(
-                "qerr_micro"
-            ),
+        subs = _pq_subvecs(e)
+        w = Window.partitionBy("vec_id", "m").orderBy(
+            F.col("d").asc(), F.col("c_id").asc()
         )
-        .persist()
+        return (
+            subs.join(F.broadcast(_pq_cdf(spark, sf_dir)), "m")
+            .select(
+                "vec_id", "m", "c_id",
+                F.expr(_L2_SPARK.format(a="sub", b="c_sub")).alias("d"),
+            )
+            .withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") == 1)
+            .select(
+                F.col("vec_id").cast("bigint").alias("vec_id"),
+                F.col("m").cast("bigint").alias("m"),
+                F.col("c_id").cast("bigint").alias("code"),
+                F.expr("cast(round(d * 1000000) as bigint)").alias(
+                    "qerr_micro"
+                ),
+            )
+        )
+
+    return _MEMO.fetch(spark, sf_dir, "pq_codes", build=build)
+
+
+def _pq_query_lut(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-query ADC lookup table (q_id, m, code, lut_micro): each query
+    subvector's L2 distance to every codebook centroid, integerised to
+    micro units."""
+    q = _pq_subvecs(
+        _cached_emb(spark, sf_dir)
+        .filter(F.col("vec_id") < C.KNN_NUM_QUERIES)
+        .select("vec_id", "emb")
+    ).withColumnRenamed("vec_id", "q_id")
+    return q.join(F.broadcast(_pq_cdf(spark, sf_dir)), "m").select(
+        "q_id", "m", F.col("c_id").alias("code"),
+        F.expr(
+            "cast(round("
+            + _L2_SPARK.format(a="sub", b="c_sub")
+            + " * 1000000) as bigint)"
+        ).alias("lut_micro"),
     )
-    codes.count()  # eager fill (materialized-index analog)
-    _BANDED_CACHE[ckey] = codes
-    return codes
 
 
 def q_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1354,22 +1326,7 @@ def q_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     codes = q_pq_encode(spark, sf_dir)
-    q = _pq_subvecs(
-        _cached_emb(spark, sf_dir)
-        .filter(F.col("vec_id") < C.KNN_NUM_QUERIES)
-        .select("vec_id", "emb")
-    ).withColumnRenamed("vec_id", "q_id")
-    lut = (
-        q.join(F.broadcast(_pq_cdf(spark, sf_dir)), "m")
-        .select(
-            "q_id", "m", F.col("c_id").alias("code"),
-            F.expr(
-                "cast(round("
-                + _L2_SPARK.format(a="sub", b="c_sub")
-                + " * 1000000) as bigint)"
-            ).alias("lut_micro"),
-        )
-    )
+    lut = _pq_query_lut(spark, sf_dir)
     scored = (
         codes.join(F.broadcast(lut), ["m", "code"])
         .filter(F.col("vec_id") != F.col("q_id"))
@@ -1379,15 +1336,17 @@ def q_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("q_id").orderBy(
         F.col("adc_micro").asc(), F.col("vec_id").asc()
     )
-    return _memo_result(
+    return _MEMO.fetch(
         spark, sf_dir, "res_pq_search",
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= C.KNN_K)
-        .select(
-            "q_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "adc_micro",
-            F.col("rnk").cast("bigint").alias("rnk"),
+        build=lambda: (
+            scored.withColumn("rnk", F.row_number().over(w))
+            .filter(F.col("rnk") <= C.KNN_K)
+            .select(
+                "q_id",
+                F.col("vec_id").alias("neighbor_id"),
+                "adc_micro",
+                F.col("rnk").cast("bigint").alias("rnk"),
+            )
         ),
     )
 
@@ -1502,13 +1461,8 @@ def q_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     # candidate (q_id, vec_id) pairs via the IVF cell machinery
-    # (same memoized ranking q_ann_ivf_topk materializes)
-    e = _cached_emb(spark, sf_dir)
-    ckey = _cache_key(spark, sf_dir, "ivf_ranked")
-    if ckey not in _BANDED_CACHE:
-        # build it through the IVF query's own path
-        q_ann_ivf_topk(spark, sf_dir)
-    ranked_cells = _BANDED_CACHE[ckey]
+    # (same memoized ranking q_ann_ivf_topk reads)
+    ranked_cells = _ivf_ranked(spark, sf_dir)
     assigned = ranked_cells.filter(F.col("crnk") == 1).select(
         "vec_id", "cell"
     )
@@ -1523,18 +1477,7 @@ def q_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("q_id", "vec_id")
     )
     codes = q_pq_encode(spark, sf_dir)
-    q = _pq_subvecs(
-        e.filter(F.col("vec_id") < C.KNN_NUM_QUERIES)
-        .select("vec_id", "emb")
-    ).withColumnRenamed("vec_id", "q_id")
-    lut = q.join(F.broadcast(_pq_cdf(spark, sf_dir)), "m").select(
-        "q_id", "m", F.col("c_id").alias("code"),
-        F.expr(
-            "cast(round("
-            + _L2_SPARK.format(a="sub", b="c_sub")
-            + " * 1000000) as bigint)"
-        ).alias("lut_micro"),
-    )
+    lut = _pq_query_lut(spark, sf_dir)
     scored = (
         codes.join(F.broadcast(cand), "vec_id")
         .join(F.broadcast(lut), ["q_id", "m", "code"])
@@ -1544,15 +1487,17 @@ def q_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("q_id").orderBy(
         F.col("adc_micro").asc(), F.col("vec_id").asc()
     )
-    return _memo_result(
+    return _MEMO.fetch(
         spark, sf_dir, "res_ivfpq_search",
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= C.KNN_K)
-        .select(
-            "q_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "adc_micro",
-            F.col("rnk").cast("bigint").alias("rnk"),
+        build=lambda: (
+            scored.withColumn("rnk", F.row_number().over(w))
+            .filter(F.col("rnk") <= C.KNN_K)
+            .select(
+                "q_id",
+                F.col("vec_id").alias("neighbor_id"),
+                "adc_micro",
+                F.col("rnk").cast("bigint").alias("rnk"),
+            )
         ),
     )
 

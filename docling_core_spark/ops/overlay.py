@@ -59,6 +59,7 @@ from typing import Iterator, List
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from ..artifacts import Memo
 from ..fixtures import _seed, _words
 from ..model import doc as D
 from ..model import labels as L
@@ -273,48 +274,35 @@ def layout_doc_ids(n: int) -> List[str]:
 
 # Per-(app, n_docs) memo of the parsed flattens: the two overlay gate
 # rows and best-of-2 bench attempts would otherwise re-run the Python
-# doctags parse over the whole corpus per call (the session-memoized
-# result-table pattern of corpus/dedup.py's shingle tables).
-_LAYOUT_CACHE: dict = {}
+# doctags parse over the whole corpus per call.
+_MEMO = Memo("overlay")
 
 
-def clear_caches() -> None:
-    """Unpersist and drop every memoized flatten. Called between sf
-    dirs (corpus.clear_all_caches), where no consumer is live."""
-    for df in _LAYOUT_CACHE.values():
-        df.unpersist()
-    _LAYOUT_CACHE.clear()
+def _flatten_df(spark: SparkSession, tag: str, n_docs: int,
+                partitions: int, flatten, schema: str) -> DataFrame:
+    """Distributed flatten: spark.range -> one Arrow stage per batch of
+    ids (embarrassingly parallel, zero shuffle); memoized per app+size."""
+    cols = [c.split()[0] for c in schema.split(",")]
 
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out: List[dict] = []
+            for i in pdf["id"]:
+                out.extend(flatten(f"lay-{int(i):08d}"))
+            yield pd.DataFrame(out, columns=cols)
 
-def _memo_df(spark: SparkSession, tag: str, n_docs: int, build):
-    key = (spark.sparkContext.applicationId, tag, n_docs)
-    if key not in _LAYOUT_CACHE:
-        df = build().persist()
-        df.count()
-        _LAYOUT_CACHE[key] = df
-    return _LAYOUT_CACHE[key]
+    return _MEMO.fetch(
+        spark, tag, n_docs,
+        build=lambda: spark.range(n_docs)
+        .repartition(partitions)
+        .mapInPandas(gen, schema=schema),
+    )
 
 
 def doc_items_df(spark: SparkSession, n_docs: int,
                  partitions: int = 32) -> DataFrame:
-    """Distributed flatten: spark.range -> one Arrow stage per batch of
-    ids (embarrassingly parallel, zero shuffle); memoized per app+size."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "page_no", "rank", "layer", "label",
-                "x0", "y0", "x1", "y1"]
-        for pdf in batches:
-            out: List[dict] = []
-            for i in pdf["id"]:
-                out.extend(flatten_doc_id(f"lay-{int(i):08d}"))
-            yield pd.DataFrame(out, columns=cols)
-
-    return _memo_df(
-        spark, "items", n_docs,
-        lambda: spark.range(n_docs)
-        .repartition(partitions)
-        .mapInPandas(gen, schema=ITEM_SCHEMA),
-    )
+    return _flatten_df(spark, "items", n_docs, partitions, flatten_doc_id,
+                       ITEM_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -552,21 +540,8 @@ def flatten_table_cells_doc_id(doc_id: str) -> List[dict]:
 
 def table_cells_df(spark: SparkSession, n_docs: int,
                    partitions: int = 32) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "page_no", "t_rank", "cell_index",
-                "x0", "y0", "x1", "y1"]
-        for pdf in batches:
-            out: List[dict] = []
-            for i in pdf["id"]:
-                out.extend(flatten_table_cells_doc_id(f"lay-{int(i):08d}"))
-            yield pd.DataFrame(out, columns=cols)
-
-    return _memo_df(
-        spark, "cells", n_docs,
-        lambda: spark.range(n_docs)
-        .repartition(partitions)
-        .mapInPandas(gen, schema=TABLE_CELL_SCHEMA),
-    )
+    return _flatten_df(spark, "cells", n_docs, partitions,
+                       flatten_table_cells_doc_id, TABLE_CELL_SCHEMA)
 
 
 def table_cells_svg_sql(src: str, dialect: str = "spark") -> str:

@@ -24,7 +24,7 @@ span interpretation (FIXTURES.md §1):
 from __future__ import annotations
 
 import re
-from typing import List, Optional, Tuple
+from typing import Iterable, List, Optional, Tuple
 
 from ..model import doc as D
 from ..model import labels as L
@@ -52,7 +52,7 @@ def _prov(page_no: int, order_on_page: int, text: str) -> dict:
 
 def parse_span_doc(
     doc_id: str,
-    spans: List[dict],
+    spans: Optional[Iterable[dict]],
     normalize: bool = True,
 ) -> Tuple[dict, dict]:
     """Interpret one document's span stream.
@@ -62,6 +62,9 @@ def parse_span_doc(
     dangling captions) instead of raising — bad documents are data, not
     exceptions, at 10^12-doc scale.
     """
+    # None and Arrow's numpy arrays of dicts (never truth-tested) alike
+    spans = sorted(spans if spans is not None else (),
+                   key=lambda s: s["offset"])
     doc = D.new_doc(name=str(doc_id))
     diags = {
         "unknown_kind": 0,
@@ -70,8 +73,6 @@ def parse_span_doc(
         "bad_table": 0,
         "n_spans": len(spans),
     }
-
-    spans = sorted(spans, key=lambda s: s["offset"])
 
     page_no = 1
     D.add_page(doc, 1, PAGE_W, PAGE_H)

@@ -37,11 +37,6 @@ from .serialize.spanseq import span_seq_from_result
 
 def process_doc(doc_id: str, spans) -> dict:
     """Parse + normalize + validate + serialize one document (pure)."""
-    if spans is None:
-        spans = []
-    else:
-        # Arrow hands array<struct> columns back as numpy arrays of dicts
-        spans = list(spans)
     from .model.validate import validate_doc, violations_total
 
     doc, diags = parse_span_doc(doc_id, spans)
@@ -86,15 +81,24 @@ def process_doc(doc_id: str, spans) -> dict:
     }
 
 
-def _process_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _per_doc(batches: Iterator[pd.DataFrame], rows_of,
+             columns: list) -> Iterator[pd.DataFrame]:
+    """The body of every per-document Arrow stage: one output frame per
+    input batch, holding `rows_of(doc_id, spans)` for each document.
+    Stages pass a lambda naming the per-doc function, so it is looked
+    up as a module global per call and a patched-in wrapper is seen."""
     for pdf in batches:
-        rows = [
-            process_doc(doc_id, spans)
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"])
-        ]
-        yield pd.DataFrame(
-            rows, columns=[f.name for f in S.PIPELINE_OUT_SCHEMA.fields]
-        )
+        rows: list = []
+        for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
+            rows.extend(rows_of(doc_id, spans))
+        yield pd.DataFrame(rows, columns=columns)
+
+
+def _process_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    return _per_doc(
+        batches, lambda d, s: [process_doc(d, s)],
+        [f.name for f in S.PIPELINE_OUT_SCHEMA.fields],
+    )
 
 
 def run_pipeline(
@@ -121,7 +125,7 @@ def roundtrip_doc(doc_id: str, spans) -> dict:
     from .parse.doctags import parse_doctags
     from .serialize.doctags import export_to_doctags as ex
 
-    doc, _ = parse_span_doc(doc_id, list(spans) if spans is not None else [])
+    doc, _ = parse_span_doc(doc_id, spans)
     s1 = ex(doc)
     s2 = ex(parse_doctags(s1, name=doc_id))
     s3 = ex(parse_doctags(s2, name=doc_id))
@@ -139,14 +143,10 @@ def roundtrip_doc(doc_id: str, spans) -> dict:
 
 
 def _roundtrip_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = [
-            roundtrip_doc(doc_id, spans)
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"])
-        ]
-        yield pd.DataFrame(
-            out, columns=["doc_id", "reload_md5", "stable", "has_chart"]
-        )
+    return _per_doc(
+        batches, lambda d, s: [roundtrip_doc(d, s)],
+        ["doc_id", "reload_md5", "stable", "has_chart"],
+    )
 
 
 def doctags_roundtrip(docs: DataFrame) -> DataFrame:
@@ -173,7 +173,7 @@ def json_roundtrip_doc(doc_id: str, spans) -> dict:
     from .model.json_io import from_reference_json, to_reference_json
     from .serialize.markdown import serialize_markdown as md
 
-    doc, _ = parse_span_doc(doc_id, list(spans) if spans is not None else [])
+    doc, _ = parse_span_doc(doc_id, spans)
     payload = _json.dumps(to_reference_json(doc), sort_keys=True)
     doc2 = from_reference_json(_json.loads(payload))
     return {
@@ -187,14 +187,10 @@ def json_roundtrip_doc(doc_id: str, spans) -> dict:
 def _json_roundtrip_batches(
     batches: Iterator[pd.DataFrame],
 ) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = [
-            json_roundtrip_doc(doc_id, spans)
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"])
-        ]
-        yield pd.DataFrame(
-            out, columns=["doc_id", "json_bytes", "json_md5", "stable"]
-        )
+    return _per_doc(
+        batches, lambda d, s: [json_roundtrip_doc(d, s)],
+        ["doc_id", "json_bytes", "json_md5", "stable"],
+    )
 
 
 def json_roundtrip(docs: DataFrame) -> DataFrame:
@@ -225,7 +221,7 @@ def variant_exports_doc(doc_id: str, spans) -> dict:
     def md5(s: str) -> str:
         return hashlib.md5(s.encode()).hexdigest()
 
-    doc, _ = parse_span_doc(doc_id, list(spans) if spans is not None else [])
+    doc, _ = parse_span_doc(doc_id, spans)
     legacy = doc_to_legacy(doc)
     legacy.pop("file-info", None)
     return {
@@ -259,13 +255,10 @@ VARIANT_EXPORTS_SCHEMA = (
 
 
 def _variant_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cols = [c.split()[0] for c in VARIANT_EXPORTS_SCHEMA.split(",")]
-    for pdf in batches:
-        out = [
-            variant_exports_doc(doc_id, spans)
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"])
-        ]
-        yield pd.DataFrame(out, columns=cols)
+    return _per_doc(
+        batches, lambda d, s: [variant_exports_doc(d, s)],
+        [c.split()[0] for c in VARIANT_EXPORTS_SCHEMA.split(",")],
+    )
 
 
 def variant_exports(docs: DataFrame) -> DataFrame:
@@ -296,7 +289,7 @@ def chunk_rows_doc(
     from .chunk.wordpiece import wordpiece_count_tokens
 
     cfg = HybridChunkerConfig(max_tokens=max_tokens)
-    doc, _ = parse_span_doc(doc_id, list(spans) if spans is not None else [])
+    doc, _ = parse_span_doc(doc_id, spans)
     stats: dict = {}
     chunks = hybrid_chunk_doc(doc, cfg, stats) if hybrid else chunk_doc(doc)
     flag = (
@@ -324,16 +317,11 @@ def _chunk_batches(hybrid: bool, max_tokens: int, with_flag: bool = False):
         "n_tokens", "context_tokens",
     ] + (["needs_text_split"] if with_flag else [])
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                out.extend(chunk_rows_doc(
-                    doc_id, spans, hybrid, max_tokens, with_flag
-                ))
-            yield pd.DataFrame(out, columns=cols)
-
-    return gen
+    return lambda batches: _per_doc(
+        batches,
+        lambda d, s: chunk_rows_doc(d, s, hybrid, max_tokens, with_flag),
+        cols,
+    )
 
 
 def chunk_docs(

@@ -1174,15 +1174,15 @@ def test_hard_negatives_triplet_invariants(spark):
     """Negatives sit strictly below the dup threshold; when an anchor
     has a positive, every triplet margin is positive (pos >= threshold
     > neg); ranks are dense and ordered by descending neg_cos."""
+    from docling_core_spark import artifacts
     from docling_core_spark.corpus import constants as C
     from docling_core_spark.corpus import mining as MI
-    from docling_core_spark.corpus import similarity as CS
 
-    CS.clear_caches()
+    artifacts.clear()
     try:
         rows = MI.q_hard_negatives(spark, SF_DIR).collect()
     finally:
-        CS.clear_caches()
+        artifacts.clear()
     assert rows
     by_q = {}
     for r in rows:

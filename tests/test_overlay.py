@@ -107,18 +107,6 @@ def test_arrow_chain_resets_per_page(spark):
         assert r["n_arrows"] == r["n_items"] - 1
 
 
-def test_clear_caches_unpersists(spark):
-    """clear_caches() frees the memoized flatten's storage, as
-    corpus.clear_all_caches() promises, and forgets it."""
-    from docling_core_spark.ops import overlay
-
-    items = doc_items_df(spark, 5, partitions=1)
-    assert items.is_cached
-    overlay.clear_caches()
-    assert not items.is_cached
-    assert not overlay._LAYOUT_CACHE
-
-
 @pytest.mark.parametrize("i", [0, 3, 11, 42])
 def test_table_cells_flatten_matches_reference(i):
     import sys

@@ -45,6 +45,32 @@ def test_spark_output_matches_local(pipe_out):
         assert got == want
 
 
+def test_stages_take_empty_and_none_spans():
+    """Every per-document stage accepts a missing (None) and an empty
+    Arrow span array: one row per doc, no chunks, no error."""
+    import numpy as np
+    import pandas as pd
+
+    from docling_core_spark import pipeline as P
+
+    pdf = pd.DataFrame({
+        "doc_id": ["none", "empty"],
+        "spans": [None, np.array([], dtype=object)],
+    })
+    stages = [P._process_batches, P._roundtrip_batches,
+              P._json_roundtrip_batches, P._variant_batches]
+    for stage in stages:
+        assert sum(len(f) for f in stage(iter([pdf]))) == 2, stage
+    chunks = P._chunk_batches(True, 64)(iter([pdf]))
+    assert sum(len(f) for f in chunks) >= 0
+    from docling_core_spark.model.validate import validate_doc
+
+    doc, diags = parse_span_doc("x", None)
+    assert diags["n_spans"] == 0 and doc["name"] == "x"
+    assert len(doc["pages"]) == 1 and not doc["texts"]
+    assert validate_doc(doc)["broken_tree"] == 0
+
+
 def test_hot_path_has_no_shuffle(spark):
     """Without salting, the plan must contain zero Exchange operators —
     the pipeline is embarrassingly parallel by design."""

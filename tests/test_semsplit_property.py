@@ -72,6 +72,12 @@ def test_split_text_reconstructs(text):
         assert "".join(splits) == text
 
 
+def test_split_text_takes_greatest_run_not_longest():
+    """The splitter is plain max() over the runs (documented in
+    _split_text): the lexicographically greatest, not the longest."""
+    assert _split_text("a\r\nb\n\n\nc")[0] == "\r\n"
+
+
 @settings(max_examples=200, deadline=None)
 @given(
     st.tuples(

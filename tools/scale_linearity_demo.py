@@ -163,13 +163,13 @@ def flagship(spark, n_docs: int):
 
 
 def neardup_chain(spark, sf_dir: str, label: str):
-    from docling_core_spark.corpus import clear_all_caches
+    from docling_core_spark import artifacts
     from docling_core_spark.corpus import dedup as CD
 
     n_docs = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
 
     def run():
-        clear_all_caches()
+        artifacts.clear()
         CD.q_dedup_clusters(spark, sf_dir).write.format("noop").mode(
             "overwrite"
         ).save()

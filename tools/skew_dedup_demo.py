@@ -264,8 +264,8 @@ def main():
         report["exact_sec"] = round(time.time() - t0, 1)
 
         pairs.unpersist()
-        from docling_core_spark.corpus import clear_all_caches
-        clear_all_caches()
+        from docling_core_spark import artifacts
+        artifacts.clear()
         print(json.dumps(report))
     finally:
         shutil.rmtree(base, ignore_errors=True)
