@@ -16,7 +16,9 @@ _MEMOS: list = []
 class Memo(dict):
     """One artifact family keyed by (applicationId, *parts). Not
     id(sparkContext): CPython can reuse an id after the old context is
-    garbage-collected, handing a later session a dead DataFrame."""
+    garbage-collected, handing a later session a dead DataFrame. Each
+    fill is logged with its seconds and size: a DataFrame's row count,
+    a list's length."""
 
     def __init__(self, name: str):
         super().__init__()
@@ -35,10 +37,12 @@ class Memo(dict):
                 # cores on a cold 16x-inflated corpus); one clean fill
                 # job removes the race
                 value = value.persist()
-                value.count()
+                n = value.count()
+            else:
+                n = len(value)
             self[key] = value
-            log.info("memo %s %s filled in %.3f s", self.name, key,
-                     time.perf_counter() - t0)
+            log.info("memo %s %s filled in %.3f s, %d rows", self.name, key,
+                     time.perf_counter() - t0, n)
         return self[key]
 
 

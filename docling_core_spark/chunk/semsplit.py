@@ -86,7 +86,13 @@ def semsplit_chunk(
     token_counter: Callable[[str], int],
     _depth: int = 0,
 ) -> List[str]:
-    """Split `text` into chunks of at most `chunk_size` tokens."""
+    """Split `text` into chunks of at most `chunk_size` tokens.
+
+    A non-whitespace splitter that no longer fits the chunk it
+    terminated is dropped, not carried into the next chunk: under a
+    character counter `semsplit_chunk("aaaa.bbbb", 4, len)` returns
+    `['aaaa', 'bbbb']`. A character that is neither whitespace nor in
+    the splitter set always survives, in order."""
     splitter, ws, splits = _split_text(text)
     join = splitter if ws else ""
     out: List[str] = []

@@ -12,6 +12,12 @@ Scale design (the 100 TB story):
   - Pairwise Jaccard verification runs ONLY on LSH candidates (a tiny
     fraction of n^2); the shingle sets are re-joined by doc_id, an
     AQE-managed shuffle join at most the size of the candidate set.
+  - The self-pair finders block, then verify (SparkER, EDBT'19): one
+    substrate, `_bucket_pairs`, groups rows by a blocking key (LSH band,
+    SimHash table, winnow print, shingle, href) and expands each bucket
+    into its pairs in the JVM; the finder then verifies them. Its
+    `max_bucket` is both the hot-bucket guard and, on an inverted index,
+    the document-frequency cap.
 
 Every op has a DuckDB oracle generated from the same constants
 (`constants.py`) so the driver's gate verifies values exactly.
@@ -221,6 +227,73 @@ def sql_lsh_buckets() -> str:
 
 
 # ---------------------------------------------------------------------------
+# blocking substrate: bucket by key -> in-bucket pairs
+# ---------------------------------------------------------------------------
+
+def _bucket_pairs(
+    rows: DataFrame, keys: list, item, max_bucket: int = 0
+) -> DataFrame:
+    """(a, b): one row per pair of distinct `item` values with a < b that
+    share a bucket of `keys`, once per shared bucket — `.distinct()`
+    gives the candidate set, `groupBy(a, b).count()` the shared-bucket
+    count.
+
+    A bucket is the SET of its items: a repeated item neither pairs
+    with itself nor counts twice, and because collect_set ignores
+    duplicates Catalyst drops a `.distinct()` that only feeds it (the
+    link finders' edge table is not shuffled a second time).
+    `max_bucket` > 0 drops buckets with more items than the cap before
+    expansion: the hot-bucket guard on LSH/SimHash/winnow buckets, and
+    on an inverted index (keys = the term) the document-frequency cap.
+    One groupBy shuffle; the O(bucket^2) expansion runs inside each
+    bucket's sorted array, no self-join."""
+    buckets = (
+        rows.groupBy(*keys)
+        .agg(F.sort_array(F.collect_set(item)).alias("ds"))
+        .filter(F.size("ds") >= 2)
+    )
+    if max_bucket > 0:
+        buckets = buckets.filter(F.size("ds") <= max_bucket)
+    return buckets.select(
+        F.explode(
+            F.expr(
+                "flatten(transform(ds, (x, i) ->"
+                " transform(slice(ds, i + 2, size(ds)), y ->"
+                " struct(x AS a, y AS b))))"
+            )
+        ).alias("p")
+    ).select("p.a", "p.b")
+
+
+def _lsh_candidates(sh: DataFrame, max_bucket: int = 0) -> DataFrame:
+    """(doc_a, doc_b): distinct pairs sharing at least one LSH band."""
+    bands = _bands_from_sig(_sig_from_shingles(sh))
+    return _bucket_pairs(
+        bands, ["band_id", "band_key"], "doc_id", max_bucket
+    ).select(F.col("a").alias("doc_a"), F.col("b").alias("doc_b")).distinct()
+
+
+def _shared_shingles(sh: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, n_a, n_b, inter): every pair sharing a shingle,
+    with both set sizes and the intersection size — the AllPairs
+    inverted index (Bayardo et al. WWW'07) over posting rows (doc_id, g),
+    stop-shingles with document frequency above `JACCARD_MAX_DF` dropped
+    (without the cap the expansion grows O(sum df^2)). Shuffles: the
+    posting groupBy (uniform: shingles are near-unique trigrams), the
+    pair count on (doc_a, doc_b), and two doc_id size joins."""
+    sizes = sh.select("doc_id", F.size("sh"))
+    posts = sh.select("doc_id", F.explode("sh").alias("g"))
+    return (
+        _bucket_pairs(posts, ["g"], "doc_id", C.JACCARD_MAX_DF)
+        .groupBy(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"))
+        .agg(F.count("*").alias("inter"))
+        .join(sizes.toDF("doc_a", "n_a"), "doc_a")
+        .join(sizes.toDF("doc_b", "n_b"), "doc_b")
+        .select("doc_a", "doc_b", "n_a", "n_b", "inter")
+    )
+
+
+# ---------------------------------------------------------------------------
 # near-dup pairs: LSH candidates -> exact shingle-Jaccard verification
 # ---------------------------------------------------------------------------
 
@@ -239,8 +312,8 @@ def q_neardup_pairs(
     Shape for 100 TB: the shingle table is computed ONCE and persisted
     (on a cluster you would materialize the signature table to storage —
     persist is the in-query analog); candidate pairs are generated
-    WITHIN each LSH bucket by a JVM array-combination expression after a
-    single groupBy(band) shuffle — no self-join of the bands table, so
+    WITHIN each LSH bucket by `_bucket_pairs` after a single
+    groupBy(band) shuffle — no self-join of the bands table, so
     the expensive minhash pipeline is never recomputed per join side.
     Bucket sizes are bounded (only near-dups collide in a band), so the
     in-bucket pair expansion is O(bucket^2) with tiny buckets.
@@ -261,30 +334,9 @@ def _compute_neardup_pairs(
     spark: SparkSession, sf_dir: str, max_bucket: int
 ) -> DataFrame:
     sh = _persisted_shingles(spark, sf_dir)
-    bands = _bands_from_sig(_sig_from_shingles(sh))
-    buckets = (
-        bands.groupBy("band_id", "band_key")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ds"))
-        .filter(F.size("ds") >= 2)
-    )
-    if max_bucket > 0:
-        buckets = buckets.filter(F.size("ds") <= max_bucket)
-    cand = (
-        buckets
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ds, (x, i) ->"
-                    " transform(slice(ds, i + 2, size(ds)), y ->"
-                    " struct(x as doc_a, y as doc_b))))"
-                )
-            ).alias("p")
-        )
-        .select("p.doc_a", "p.doc_b")
-        .distinct()
-    )
-    pairs = (
-        cand.join(sh.alias("sa"), F.col("doc_a") == F.col("sa.doc_id"))
+    return (
+        _lsh_candidates(sh, max_bucket)
+        .join(sh.alias("sa"), F.col("doc_a") == F.col("sa.doc_id"))
         .join(sh.alias("sb"), F.col("doc_b") == F.col("sb.doc_id"))
         .select(
             "doc_a",
@@ -295,8 +347,8 @@ def _compute_neardup_pairs(
                 " - size(array_intersect(sa.sh, sb.sh)) as double), 6)"
             ).alias("jaccard"),
         )
+        .filter(F.col("jaccard") >= C.JACCARD_THRESHOLD)
     )
-    return pairs.filter(F.col("jaccard") >= C.JACCARD_THRESHOLD)
 
 
 def sql_neardup_pairs() -> str:
@@ -379,62 +431,19 @@ def sql_simhash() -> str:
 def q_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT shingle-Jaccard similarity join — no LSH recall loss.
 
-    Inverted-index plan (the AllPairs/PPJoin family, Bayardo et al.
-    WWW'07): explode each document's distinct-shingle set into posting
-    rows, drop stop-shingles whose document frequency exceeds
-    `JACCARD_MAX_DF` (boilerplate mass with no discriminative value —
-    without the cap the self-join grows O(sum df^2); the DuckDB oracle
-    applies the same cap so both engines compute identical sets), then
-    self-join postings on the shingle, count intersections per ordered
-    pair, and compute |A∩B| / (|A| + |B| - |A∩B|).
-
-    Shuffle inventory: postings groupBy shingle (uniform: shingles are
-    near-unique text trigrams), pair groupBy (doc_a, doc_b) (uniform),
-    two joins on doc_id for set sizes (uniform). Complements
+    Inverted-index plan (the AllPairs/PPJoin family): `_shared_shingles`
+    blocks posting rows by shingle with the stop-shingle DF cap
+    (`JACCARD_MAX_DF`; the DuckDB oracle applies the same cap so both
+    engines compute identical sets) and counts intersections per pair;
+    this computes |A∩B| / (|A| + |B| - |A∩B|). Complements
     `neardup_pairs` (MinHash-LSH candidates -> Jaccard verify): LSH is
     the sub-quadratic scale path with banding recall; this is the exact
     path whose cost is bounded by the posting DF distribution.
     """
-    sh = _persisted_shingles(spark, sf_dir)
-    counts = sh.select("doc_id", F.size("sh").alias("n_sh"))
-    posts = sh.select("doc_id", F.explode("sh").alias("g"))
-    hot = (
-        posts.groupBy("g")
-        .agg(F.count("*").alias("df"))
-        .filter(F.col("df") > C.JACCARD_MAX_DF)
-        .select("g")
-    )
-    posts = posts.join(F.broadcast(hot), "g", "left_anti")
-    a = posts.alias("a")
-    b = posts.alias("b")
-    inter = (
-        a.join(b, "g")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        )
-        .agg(F.count("*").alias("inter"))
-    )
     return (
-        inter.join(
-            counts.select(
-                F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a")
-            ),
-            "doc_a",
-        )
-        .join(
-            counts.select(
-                F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b")
-            ),
-            "doc_b",
-        )
+        _shared_shingles(_persisted_shingles(spark, sf_dir))
         .select(
-            "doc_a",
-            "doc_b",
-            "n_a",
-            "n_b",
-            "inter",
+            "*",
             F.expr(
                 "round(inter / cast(n_a + n_b - inter as double), 6)"
             ).alias("jaccard"),
@@ -1119,62 +1128,20 @@ def q_lsh_scurve(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-0 below the threshold deciles, near-10^6 above.
 
     100 TB story: the exact all-pairs side is the AllPairs inverted
-    index (DF-capped postings) — at production scale you run the
-    calibration on a sampled stratum (compose with stratified_sample),
-    exactly how band parameters are tuned in practice; the candidate
-    side reuses the banded groupBy pair expansion; the final rollup is
-    a 10-row map-side-combinable groupBy.
+    index (`_shared_shingles`, DF-capped postings) — at production
+    scale you run the calibration on a sampled stratum (compose with
+    stratified_sample), exactly how band parameters are tuned in
+    practice; the candidate side is `neardup_pairs`' `_lsh_candidates`;
+    the final rollup is a 10-row map-side-combinable groupBy.
     """
     sh = _persisted_shingles(spark, sf_dir)
-    counts = sh.select("doc_id", F.size("sh").alias("n_sh"))
-    posts = sh.select("doc_id", F.explode("sh").alias("g"))
-    hot = (
-        posts.groupBy("g")
-        .agg(F.count("*").alias("df"))
-        .filter(F.col("df") > C.JACCARD_MAX_DF)
-        .select("g")
+    pairs = _shared_shingles(sh).select(
+        "doc_a", "doc_b",
+        F.expr(
+            "round(inter / cast(n_a + n_b - inter as double), 6)"
+        ).alias("jaccard"),
     )
-    posts = posts.join(F.broadcast(hot), "g", "left_anti")
-    inter = (
-        posts.alias("a").join(posts.alias("b"), "g")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        )
-        .agg(F.count("*").alias("inter"))
-    )
-    pairs = (
-        inter
-        .join(counts.select(F.col("doc_id").alias("doc_a"),
-                            F.col("n_sh").alias("n_a")), "doc_a")
-        .join(counts.select(F.col("doc_id").alias("doc_b"),
-                            F.col("n_sh").alias("n_b")), "doc_b")
-        .select(
-            "doc_a", "doc_b",
-            F.expr(
-                "round(inter / cast(n_a + n_b - inter as double), 6)"
-            ).alias("jaccard"),
-        )
-    )
-    bands = _bands_from_sig(_sig_from_shingles(sh))
-    cand = (
-        bands.groupBy("band_id", "band_key")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ds"))
-        .filter(F.size("ds") >= 2)
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ds, (x, i) ->"
-                    " transform(slice(ds, i + 2, size(ds)), y ->"
-                    " struct(x as doc_a, y as doc_b))))"
-                )
-            ).alias("p")
-        )
-        .select("p.doc_a", "p.doc_b")
-        .distinct()
-        .withColumn("is_cand", F.lit(1))
-    )
+    cand = _lsh_candidates(sh).withColumn("is_cand", F.lit(1))
     b, r = C.LSH_BANDS, C.ROWS_PER_BAND
     return (
         pairs.join(cand, ["doc_a", "doc_b"], "left")
@@ -1482,8 +1449,8 @@ def q_simhash_neardup(
     keys — 16-17-bit keys whose space grows with the fingerprint
     width, so buckets hold only true near-duplicates plus ~n/2^16
     random collisions per table. ONE shuffle (groupBy table_id, tkey),
-    in-bucket pair expansion exactly like the MinHash path (no
-    self-join, fingerprints ride along in the bucket struct so
+    in-bucket pair expansion by `_bucket_pairs` like the MinHash path
+    (no self-join, fingerprints ride along in the bucket struct so
     verification is a bit_count on the spot, no re-join), then a
     uniform pair-key distinct. `max_bucket` > 0 is the same hot-bucket
     guard as `q_neardup_pairs` — an exact-duplicate mega-cluster
@@ -1503,34 +1470,20 @@ def q_simhash_neardup(
         "simhash",
         F.expr(f"explode(array({tbl_structs}))").alias("tb"),
     ).select("doc_id", "simhash", "tb.table_id", "tb.tkey")
-    buckets = (
-        bands.groupBy("table_id", "tkey")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct("doc_id", "simhash"))
-            ).alias("ds")
+    return (
+        _bucket_pairs(
+            bands, ["table_id", "tkey"], F.struct("doc_id", "simhash"),
+            max_bucket,
         )
-        .filter(F.size("ds") >= 2)
-    )
-    if max_bucket > 0:
-        buckets = buckets.filter(F.size("ds") <= max_bucket)
-    pairs = (
-        buckets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ds, (x, i) ->"
-                    " transform(slice(ds, i + 2, size(ds)), y ->"
-                    " struct(x.doc_id AS doc_a, y.doc_id AS doc_b,"
-                    " cast(bit_count(x.simhash ^ y.simhash) AS bigint)"
-                    " AS hamming))))"
-                )
-            ).alias("p")
+        .select(
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+            F.expr("cast(bit_count(a.simhash ^ b.simhash) AS bigint)")
+            .alias("hamming"),
         )
-        .select("p.doc_a", "p.doc_b", "p.hamming")
         .filter(F.col("hamming") <= C.SIMHASH_HAMMING_MAX)
         .distinct()
     )
-    return pairs
 
 
 def sql_simhash_neardup() -> str:
@@ -1781,8 +1734,8 @@ def q_winnow_overlap(
 
     100 TB story: the fingerprint table is ~2/(W+1) of gram count and
     carries only (doc_id, h) after the per-doc distinct; ONE groupBy(h)
-    shuffle builds the inverted index, in-bucket pair expansion exactly
-    like the SimHash path (buckets hold only docs sharing a fingerprint
+    shuffle builds the inverted index, in-bucket pair expansion by
+    `_bucket_pairs` (buckets hold only docs sharing a fingerprint
     plus ~n/2^30 random collisions), the pair rollup is map-side
     combined, and per-doc print counts join back at pair-table size.
     `max_bucket` caps degenerate boilerplate hashes the same way the
@@ -1795,24 +1748,9 @@ def q_winnow_overlap(
     counts = fps.groupBy("doc_id").agg(
         F.count("*").cast("bigint").alias("n_fp")
     )
-    buckets = (
-        fps.groupBy("h")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ds"))
-        .filter(F.size("ds") >= 2)
-    )
-    if max_bucket > 0:
-        buckets = buckets.filter(F.size("ds") <= max_bucket)
     pairs = (
-        buckets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ds, (x, i) ->"
-                    " transform(slice(ds, i + 2, size(ds)),"
-                    " y -> struct(x AS doc_a, y AS doc_b))))"
-                )
-            ).alias("p")
-        )
-        .groupBy("p.doc_a", "p.doc_b")
+        _bucket_pairs(fps, ["h"], "doc_id", max_bucket)
+        .groupBy(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"))
         .agg(F.count("*").cast("bigint").alias("n_shared"))
         .filter(F.col("n_shared") >= WINNOW_MIN_SHARED)
     )
@@ -2173,48 +2111,16 @@ def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     larger doc), so they need their own detector; C(A->B) = |A∩B|/|A|
     (Broder '97's containment, the original resemblance companion).
 
-    Rides the exact inverted-index machinery of `q_jaccard_pairs`
-    (same posting table, same stop-shingle DF cap, same memoized
-    shingle artifact), so the incremental cost over a corpus that
-    already ran the exact join is one more projection of the
-    intersection table. Shuffle inventory identical to jaccard_pairs.
+    Rides `q_jaccard_pairs`' inverted index (`_shared_shingles`: same
+    posting table, same stop-shingle DF cap, same memoized shingle
+    artifact), so the incremental cost over a corpus that already ran
+    the exact join is one more projection of the intersection table.
+    Shuffle inventory identical to jaccard_pairs.
     """
-    sh = _persisted_shingles(spark, sf_dir)
-    counts = sh.select("doc_id", F.size("sh").alias("n_sh"))
-    posts = sh.select("doc_id", F.explode("sh").alias("g"))
-    hot = (
-        posts.groupBy("g")
-        .agg(F.count("*").alias("df"))
-        .filter(F.col("df") > C.JACCARD_MAX_DF)
-        .select("g")
-    )
-    posts = posts.join(F.broadcast(hot), "g", "left_anti")
-    a = posts.alias("a")
-    b = posts.alias("b")
-    inter = (
-        a.join(b, "g")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        )
-        .agg(F.count("*").alias("inter"))
-    )
     return (
-        inter.join(
-            counts.select(
-                F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a")
-            ),
-            "doc_a",
-        )
-        .join(
-            counts.select(
-                F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b")
-            ),
-            "doc_b",
-        )
+        _shared_shingles(_persisted_shingles(spark, sf_dir))
         .select(
-            "doc_a", "doc_b", "n_a", "n_b", "inter",
+            "*",
             F.expr("round(inter / cast(n_a as double), 6)").alias("c_a"),
             F.expr("round(inter / cast(n_b as double), 6)").alias("c_b"),
             F.expr(

@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import read_spread
+from .dedup import _bucket_pairs, _cluster_table
 from .textstats import _spark_re
 
 # Classifier constants (shared by both dialects).
@@ -706,11 +707,11 @@ def sql_anchor_text_agg() -> str:
 
 def q_link_cocitation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """100 TB story: the per-doc outlink set is bounded (crawlers cap
-    outdegree), so the in-array pair expansion — one groupBy(doc_id)
-    collect + the same explode-slice idiom as the LSH bucket path —
-    emits O(outdeg^2) rows per doc with NO self-join of the edge table
-    (a naive edges-x-edges join on doc_id shuffles the corpus twice
-    and skews on link-heavy docs; here the doc's own array expands
+    outdegree), so the in-array pair expansion — `_bucket_pairs` with
+    the doc as the bucket and its hrefs as the items, the LSH paths'
+    substrate — emits O(outdeg^2) rows per doc with NO self-join of the
+    edge table (a naive edges-x-edges join on doc_id shuffles the corpus
+    twice and skews on link-heavy docs; here the doc's own array expands
     map-side after one uniform exchange). The pair rollup is a
     map-side-combined groupBy: the globally hot pair ("/" x a hub,
     present in every doc) collapses per map task. Degree join is
@@ -721,19 +722,7 @@ def q_link_cocitation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "href")
         .distinct()
     )
-    perdoc = links.groupBy("doc_id").agg(
-        F.sort_array(F.collect_set("href")).alias("hs")
-    )
-    pairs = perdoc.select(
-        F.explode(
-            F.expr(
-                "flatten(transform(hs, (x, i) ->"
-                " transform(slice(hs, i + 2, size(hs)),"
-                " y -> struct(x AS a, y AS b))))"
-            )
-        ).alias("p")
-    ).select("p.a", "p.b")
-    co = pairs.groupBy("a", "b").agg(
+    co = _bucket_pairs(links, ["doc_id"], "href").groupBy("a", "b").agg(
         F.count("*").cast("bigint").alias("n_co")
     )
     deg = links.groupBy("href").agg(
@@ -791,51 +780,26 @@ def q_link_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weakly-connected components over the "documents sharing an
     outlink" graph — the site/mirror clustering a crawler feeds
     domain-level dedup and seed selection. Reuses the dedup module's
-    pointer-jumping CC machinery (_min_label_components — the SAME
-    O(log diameter) operator, applied to a second graph, evidencing it
-    is generic, not dedup-specific). Hub links (cited by >
-    LINKCC_MAX_DF docs) are dropped before pair expansion — the
-    inverted-index df-cap discipline — so no href expands into a
-    quadratic pair blowup; every doc still appears in the output
-    (singletons label themselves).
+    blocking substrate and pointer-jumping CC table (`_bucket_pairs`,
+    `_cluster_table` — the SAME O(log diameter) operator, applied to a
+    second graph, evidencing it is generic, not dedup-specific). Hub
+    links (cited by > LINKCC_MAX_DF docs) are dropped before pair
+    expansion — the inverted-index df-cap, as `_bucket_pairs`'
+    `max_bucket` — so no href expands into a quadratic pair blowup;
+    every doc still appears in the output (singletons label themselves).
 
     Output mirrors dedup_clusters: (doc_id, cluster_id, cluster_size,
     is_canonical)."""
-    from .dedup import _min_label_components
-
     links = (
         q_extract_links(spark, sf_dir)
         .select("doc_id", "href")
         .distinct()
     )
-    # the BOUNDED set is the HUBS (df > cap) — broadcast those and
-    # anti-join; broadcasting the keep-list would ship nearly every
-    # distinct href at web scale
-    hubs = links.groupBy("href").agg(
-        F.count("*").cast("bigint").alias("df")
-    ).filter(F.col("df") > LINKCC_MAX_DF).select("href")
-    capped = links.join(F.broadcast(hubs), "href", "left_anti")
-    perhref = capped.groupBy("href").agg(
-        F.sort_array(F.collect_set("doc_id")).alias("ds")
-    )
-    pairs = perhref.select(
-        F.explode(
-            F.expr(
-                "flatten(transform(ds, (x, i) ->"
-                " transform(slice(ds, i + 2, size(ds)),"
-                " y -> struct(x AS doc_a, y AS doc_b))))"
-            )
-        ).alias("p")
-    ).select("p.doc_a", "p.doc_b").distinct()
+    pairs = _bucket_pairs(links, ["href"], "doc_id", LINKCC_MAX_DF).select(
+        F.col("a").alias("doc_a"), F.col("b").alias("doc_b")
+    ).distinct()
     docs = read_spread(spark, sf_dir, "documents").select("doc_id")
-    labels = _min_label_components(docs, pairs)
-    sizes = labels.groupBy("cluster_id").agg(
-        F.count("*").cast("bigint").alias("cluster_size")
-    )
-    return labels.join(sizes, "cluster_id").select(
-        "doc_id", "cluster_id", "cluster_size",
-        (F.col("doc_id") == F.col("cluster_id")).alias("is_canonical"),
-    )
+    return _cluster_table(docs, pairs)
 
 
 def sql_link_components() -> str:

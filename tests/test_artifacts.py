@@ -22,6 +22,9 @@ def test_fill_logged_once_and_second_call_hits(spark, caplog):
         with caplog.at_level(logging.INFO, logger=artifacts.__name__):
             first = CD.q_dedup_clusters(spark, SF)
             assert [r.args[0] for r in _fills(caplog)] == ["dedup.clusters"]
+            # the fill logs its size: one cluster row per corpus document
+            assert _fills(caplog)[0].args[-1] == 500
+            assert _fills(caplog)[0].getMessage().endswith(", 500 rows")
             caplog.clear()
             assert CD.q_dedup_clusters(spark, SF) is first
             assert not _fills(caplog)

@@ -840,20 +840,14 @@ def test_cdc_segments_shift_robustness(spark, tmp_path):
     assert len(d1 & d2) >= len(d1) - 2, (len(d1), len(d1 & d2))
 
 
-def test_hot_bucket_caps_on_new_pair_searches(spark, tmp_path):
-    """An exact-duplicate mega-cluster collapses into single hot
-    buckets; max_bucket must drop those buckets (their pairs belong to
-    exact dedup) while distinct near-dup pairs survive."""
+def _mega_cluster_corpus(tmp_path) -> str:
+    """30 identical docs (the mega-cluster) + 2 distinct docs 100 and
+    101 sharing most content with each other but not the cluster."""
     import pandas as pd
-    from docling_core_spark.corpus.dedup import (
-        clear_caches, q_simhash_neardup, q_winnow_overlap,
-    )
 
     base = " ".join(f"tok{i * 13 % 89}" for i in range(60))
     docs = pd.DataFrame(
         {
-            # 30 identical docs (the mega-cluster) + 2 distinct docs
-            # sharing most content with each other but not the cluster
             "doc_id": list(range(1, 31)) + [100, 101],
             "text": ["dup " * 40] * 30
             + [base + " extraa", base + " extrab"],
@@ -863,7 +857,18 @@ def test_hot_bucket_caps_on_new_pair_searches(spark, tmp_path):
     docs["source"] = "t"
     docs["n_chars"] = docs["text"].str.len()
     docs.to_parquet(tmp_path / "documents.parquet")
-    sf = str(tmp_path)
+    return str(tmp_path)
+
+
+def test_hot_bucket_caps_on_new_pair_searches(spark, tmp_path):
+    """An exact-duplicate mega-cluster collapses into single hot
+    buckets; max_bucket must drop those buckets (their pairs belong to
+    exact dedup) while distinct near-dup pairs survive."""
+    from docling_core_spark.corpus.dedup import (
+        clear_caches, q_simhash_neardup, q_winnow_overlap,
+    )
+
+    sf = _mega_cluster_corpus(tmp_path)
     try:
         capped = q_simhash_neardup(spark, sf, max_bucket=10).collect()
         ids = {r["doc_a"] for r in capped} | {r["doc_b"] for r in capped}
@@ -880,6 +885,85 @@ def test_hot_bucket_caps_on_new_pair_searches(spark, tmp_path):
         )
     finally:
         clear_caches()
+
+
+def test_bucket_pairs_matches_brute_force(spark):
+    """The blocking substrate emits every a < b pair inside each bucket,
+    once per shared bucket; max_bucket drops buckets above the cap; a
+    repeated item counts once."""
+    from collections import Counter
+    from itertools import combinations
+
+    from pyspark.sql import functions as F
+
+    from docling_core_spark.corpus.dedup import _bucket_pairs
+
+    buckets = {
+        "k1": [7],
+        "k2": [1, 2],
+        "k3": [3, 1, 2],  # (1, 2) shares k2 and k3
+        "k5": [9, 4, 8, 5, 6],
+    }
+    rows = spark.createDataFrame(
+        [(k, d, d * 10) for k, ds in buckets.items() for d in ds]
+        + [("k2", 2, 20)],  # a repeated item: k2 is still {1, 2}
+        "key string, doc_id bigint, sig bigint",
+    )
+
+    def brute(cap):
+        return Counter(
+            p for ds in buckets.values() if not cap or len(ds) <= cap
+            for p in combinations(sorted(ds), 2)
+        )
+
+    for cap in (0, 3):
+        got = Counter(
+            (r["a"], r["b"])
+            for r in _bucket_pairs(rows, ["key"], "doc_id", cap).collect()
+        )
+        assert got == brute(cap), cap
+    assert brute(3)[(1, 3)] == 1 and not brute(3)[(4, 5)]
+    assert brute(0)[(1, 2)] == 2
+
+    structs = _bucket_pairs(
+        rows, ["key"], F.struct("doc_id", "sig"), 3
+    ).collect()
+    assert Counter(
+        (r["a"]["doc_id"], r["b"]["doc_id"]) for r in structs
+    ) == brute(3)
+    assert all(r["a"]["sig"] == 10 * r["a"]["doc_id"]
+               and r["b"]["sig"] == 10 * r["b"]["doc_id"] for r in structs)
+
+
+def test_shingle_df_cap_matches_oracles(spark, tmp_path, monkeypatch):
+    """A document-frequency cap below the mega-cluster's shingle df:
+    the three inverted-index pair finders still equal their DuckDB
+    oracles, and the cap really removes pairs."""
+    from docling_core_spark.corpus import constants as C
+    from docling_core_spark.corpus import dedup as CD
+
+    sf = _mega_cluster_corpus(tmp_path)
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM"
+        f" read_parquet('{tmp_path / 'documents.parquet'}')"
+    )
+    try:
+        uncapped = CD.q_jaccard_pairs(spark, sf).collect()
+        monkeypatch.setattr(C, "JACCARD_MAX_DF", 10)
+        for name in ("jaccard_pairs", "containment_pairs", "lsh_scurve"):
+            df = getattr(CD, f"q_{name}")(spark, sf)
+            got = _normalize(df.collect(), df.columns)
+            cur = con.execute(getattr(CD, f"sql_{name}")())
+            want = _normalize(cur.fetchall(),
+                              [d[0] for d in cur.description])
+            assert got == want, name
+        capped = CD.q_jaccard_pairs(spark, sf).collect()
+        assert {(r["doc_a"], r["doc_b"]) for r in capped} == {(100, 101)}
+        assert len(uncapped) == len(capped) + 30 * 29 // 2
+    finally:
+        CD.clear_caches()
+        con.close()
 
 
 def test_pq_codes_structure_and_adc_usefulness(spark):

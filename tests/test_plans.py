@@ -154,19 +154,26 @@ def test_ivf_pairs_broadcast_into_embedding_joins(spark):
     assert "BroadcastHashJoin" in plan, plan
 
 
-def test_jaccard_pairs_broadcasts_stop_shingle_list(spark):
-    """The hot-shingle exclusion list (tiny: shingles with df > cap)
-    must reach the posting table as a broadcast anti-join, and the
-    whole exact-join plan stays within its bounded shuffle budget:
-    posting-df agg, pair agg, two doc_id joins (+ read_spread fan-out
-    on the tiny test file)."""
+def test_jaccard_pairs_caps_df_without_self_join(spark):
+    """The stop-shingle DF cap is a bucket-size cap on the posting
+    groupBy (`_bucket_pairs`): posting rows never meet in a self-join,
+    the pairs come from an in-bucket Generate, and the whole
+    exact-join plan stays within its bounded shuffle budget: posting
+    groupBy, pair agg, two doc_id joins (+ read_spread fan-out on the
+    tiny test file)."""
     import re
 
     from docling_core_spark.corpus.dedup import q_jaccard_pairs
 
     plan = _plan(q_jaccard_pairs(spark, SF))
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoop" not in plan
-    assert "Broadcast" in plan, plan
+    # (join, left keys) per join node: only the doc_id size joins,
+    # none keyed on the posting shingle g
+    joins = re.findall(
+        r"^\(\d+\) (\w*Join)\nLeft keys \[\d+\]: \[(.*)\]", plan, re.M
+    )
+    assert joins, plan
+    assert not [j for j, keys in joins if keys.startswith("g#")], plan
+    assert re.search(r"^\(\d+\) Generate", plan, re.M), plan
     exchanges = re.findall(r"^\(\d+\) Exchange", plan, re.M)
     assert len(exchanges) <= 6, plan
 

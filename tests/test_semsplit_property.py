@@ -7,7 +7,9 @@ table-cell overlay."""
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from docling_core_spark.chunk.semsplit import _split_text, semsplit_chunk
+from docling_core_spark.chunk.semsplit import (
+    _NON_WS_SPLITTERS, _split_text, semsplit_chunk,
+)
 from docling_core_spark.ops.overlay import cell_px_bbox
 
 _WORDS = st.lists(
@@ -59,6 +61,31 @@ def test_over_budget_single_characters_terminate():
     for text in ("abcdef", "héllo wörld", "x"):
         out = semsplit_chunk(text, 1, counter)
         assert "".join(out) == text.replace(" ", "")
+
+
+def test_char_counter_drops_splitter_that_no_longer_fits():
+    """Under a character-level counter a non-whitespace splitter is
+    re-attached only while it fits the budget; otherwise it is dropped
+    (the documented lossy rule, shared by both gate sides)."""
+    assert semsplit_chunk("aaaa.bbbb", 4, len) == ["aaaa", "bbbb"]
+    assert semsplit_chunk("aa.bb", 4, len) == ["aa.", "bb"]
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.text(alphabet="abc.,;- ", min_size=1, max_size=80),
+       st.integers(min_value=1, max_value=12))
+def test_char_counter_keeps_every_non_splitter_in_order(text, budget):
+    """With counter=len every chunk fits the budget and only splitters
+    (whitespace and the non-whitespace splitter set) can go missing:
+    every other character survives, in order."""
+    out = semsplit_chunk(text, budget, len)
+    assert all(len(piece) <= budget for piece in out)
+
+    def kept(s):
+        return [c for c in s
+                if not c.isspace() and c not in _NON_WS_SPLITTERS]
+
+    assert kept("".join(out)) == kept(text)
 
 
 @settings(max_examples=100, deadline=None)

@@ -1,6 +1,9 @@
 """Simulate the driver's correctness gate: run each queries() entry on
 Spark and its oracle_sql() on DuckDB over the same sf dir; compare row
-count, sorted column names, and order-insensitive value multiset."""
+count, sorted column names, and order-insensitive value multiset.
+
+Usage: check_correctness.py [SF_DIR] [NAME,NAME,...]
+Exits 1 unless every query run prints MATCH or rows-only."""
 import os
 import sys
 
@@ -58,6 +61,7 @@ def main(sf_dir="/root/testdata/sf0.01", only=None):
         )
     qs = E.queries()
     oracles = E.oracle_sql()
+    only = set(only.split(",")) if only else None
     results = {}
     for name, fn in qs.items():
         if only and name not in only:
@@ -94,7 +98,8 @@ def main(sf_dir="/root/testdata/sf0.01", only=None):
     for k, v in results.items():
         print(f"{k:28s} {v}")
     spark.stop()
+    return all(v.startswith(("MATCH", "rows-only")) for v in results.values())
 
 
 if __name__ == "__main__":
-    main(*(sys.argv[1:] or []))
+    sys.exit(0 if main(*(sys.argv[1:] or [])) else 1)
