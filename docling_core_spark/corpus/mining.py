@@ -6,12 +6,14 @@ its hardest NEGATIVES (the highest-cosine neighbors BELOW it — similar
 enough to be informative, distinct enough to be true negatives), plus
 the triplet margin pos_cos - neg_cos the loss actually sees.
 
-Composes the similarity family's materialized artifacts: the banded
-LSH signature table supplies candidates (collide in ANY band, deduped
-map-side by the min-band filter), the cached embedding/norm table
-supplies exact cosines. No new corpus-wide pass: candidate cost is
-query-set x collisions, exactly the ann_lsh_topk shape, and positives
-and negatives are split from ONE scored candidate table.
+Composes the similarity family's substrate: `similarity._lsh_scored`
+is the scored candidate table (the banded LSH signature table supplies
+candidates that collide in ANY band, deduped map-side by the min-band
+filter; `_score_pairs` adds exact cosines from the cached
+embedding/norm table) and `similarity._nearest` ranks the negatives.
+No new corpus-wide pass: candidate cost is query-set x collisions,
+exactly the ann_lsh_topk shape, and positives and negatives are split
+from ONE scored candidate table.
 
 100 TB story: the broadcast query-band join keeps both embedding joins
 scan-shaped; the positive reduction is an agg max per anchor (no
@@ -24,70 +26,35 @@ Reference analog: none (SURVEY.md §2.8).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import constants as C
 from .similarity import (
-    _MIN_BAND_FILTER,
-    _COS_SPARK,
     _banded_cte_duck,
-    _banded_ids,
-    _cached_emb,
     _dot_duck,
-    _dot_spark,
+    _lsh_scored,
+    _nearest,
     _norm2_duck,
 )
 
 NEG_K = 5  # hardest negatives kept per anchor
 
 
-def _scored_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ids = _banded_ids(spark, sf_dir)
-    cand = (
-        F.broadcast(ids.filter(F.col("vec_id") < C.KNN_NUM_QUERIES))
-        .alias("a")
-        .join(ids.alias("b"), on=["band_id", "bucket"])
-        .filter(F.col("a.vec_id") != F.col("b.vec_id"))
-        .filter(F.expr(_MIN_BAND_FILTER))
-        .select(
-            F.col("a.vec_id").alias("q_id"),
-            F.col("b.vec_id").alias("neighbor_id"),
-        )
-    )
-    e = _cached_emb(spark, sf_dir)
-    return (
-        F.broadcast(cand)
-        .join(e.alias("a"), F.col("q_id") == F.col("a.vec_id"))
-        .join(e.alias("b"), F.col("neighbor_id") == F.col("b.vec_id"))
-        .select(
-            "q_id",
-            "neighbor_id",
-            F.expr(
-                _COS_SPARK.format(dot=_dot_spark("a.emb", "b.emb"))
-            ).alias("cos_sim"),
-        )
-    )
-
-
 def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
-    scored = _scored_candidates(spark, sf_dir)
+    scored = _lsh_scored(spark, sf_dir)
     pos = (
         scored.where(f"cos_sim >= {C.COSINE_NEARDUP_THRESHOLD}")
         .groupBy("q_id")
         .agg(F.max("cos_sim").alias("pos_cos"))
     )
     neg = scored.where(f"cos_sim < {C.COSINE_NEARDUP_THRESHOLD}")
-    w = Window.partitionBy("q_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
     return (
-        neg.withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .where(f"rk <= {NEG_K}")
+        _nearest(neg, NEG_K)
         .join(F.broadcast(pos), "q_id", "left")
         .select(
             "q_id",
-            "rk",
+            F.col("rank").cast("bigint").alias("rk"),
             F.col("neighbor_id").alias("neg_id"),
             F.col("cos_sim").alias("neg_cos"),
             "pos_cos",

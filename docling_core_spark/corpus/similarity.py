@@ -20,15 +20,34 @@ Scale design:
   - All arithmetic is float32 -> float64 widened THEN combined in a fixed
     left-to-right order so the DuckDB oracle reproduces bit-identical
     doubles before the final round(×, 6).
+
+Every Spark searcher is candidates -> score -> rank on one substrate:
+  - `_cos_spark` is the one 6dp cosine expression;
+  - `_score_pairs(cand, e, a, b)` verifies candidate id pairs with two
+    joins against the (vec_id, emb, nrm) table (the caller broadcasts
+    a query-bounded `cand`);
+  - `_top_k` is the one per-group row_number top-k / argmin window;
+    `_nearest` ranks (q_id, neighbor_id, cos_sim) by cosine and
+    `_adc_nearest` ranks PQ lookups by their ADC sum;
+  - `_cents_df` / `_nearest_cells` are the max-cosine centroid
+    assignment (IVF training, the probe ranking, the cell assignment)
+    and `_pq_cdf` / `_pq_nearest` the PQ subvector assignment;
+  - `_lsh_scored` and `_ivf_candidates` are the shared candidate sets
+    (mining.q_hard_negatives reads `_lsh_scored` too), and
+    `_recall_report` is the one recall@k body.
+The `sql_*` DuckDB oracles stay hand-written: they are the independent
+reference.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..artifacts import Memo
-from . import constants as C, read_spread
+from . import artifact_path, constants as C, read_spread
 
 # ---------------------------------------------------------------------------
 # expression fragments
@@ -57,6 +76,12 @@ def _norm2_spark(a: str) -> str:
 
 def _norm2_duck(a: str) -> str:
     return _dot_duck(a, a)
+
+
+def _cos_spark(a: str, b: str, na: str, nb: str) -> str:
+    """The one 6dp cosine: dot(a, b) / (na * nb), operands in the
+    caller's order (the oracle evaluates the same IEEE sequence)."""
+    return f"round({_dot_spark(a, b)} / ({na} * {nb}), 6)"
 
 
 def _plane_lit_spark(plane: list[int]) -> str:
@@ -99,7 +124,45 @@ def _emb_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_COS_SPARK = "round({dot} / (a.nrm * b.nrm), 6)"
+# ---------------------------------------------------------------------------
+# the scoring substrate: verify, rank
+# ---------------------------------------------------------------------------
+
+def _score_pairs(cand: DataFrame, e: DataFrame, a: str, b: str) -> DataFrame:
+    """`cand` plus `cos_sim` of its id columns `a` and `b`, each
+    resolved by a join against the (vec_id, emb, nrm) table `e`."""
+    return (
+        cand.join(e.alias("a"), F.col(a) == F.col("a.vec_id"))
+        .join(e.alias("b"), F.col(b) == F.col("b.vec_id"))
+        .select(
+            *cand.columns,
+            F.expr(_cos_spark("a.emb", "b.emb", "a.nrm", "b.nrm")).alias(
+                "cos_sim"
+            ),
+        )
+    )
+
+
+def _top_k(
+    df: DataFrame, part: str | list[str], order: list[Column], k: int,
+    rank: str = "rnk",
+) -> DataFrame:
+    """The first `k` rows of each `part` group in `order`, numbered
+    1..k in column `rank` (k = 1 is an argmin/argmax)."""
+    w = Window.partitionBy(part).orderBy(*order)
+    return df.withColumn(rank, F.row_number().over(w)).filter(
+        F.col(rank) <= k
+    )
+
+
+def _nearest(scored: DataFrame, k: int, *extra: str) -> DataFrame:
+    """Each query's k highest-cosine neighbors (ties: lower
+    neighbor_id) as (q_id, *extra, neighbor_id, rank, cos_sim)."""
+    return _top_k(
+        scored, "q_id", [F.col("cos_sim").desc(), F.col("neighbor_id")], k
+    ).select(
+        "q_id", *extra, "neighbor_id", F.col("rnk").alias("rank"), "cos_sim"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -108,8 +171,6 @@ _COS_SPARK = "round({dot} / (a.nrm * b.nrm), 6)"
 
 def q_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-k: broadcast the query rows against the full corpus."""
-    from pyspark.sql.window import Window
-
     e = _emb_df(spark, sf_dir)
     q = e.filter(F.col("vec_id") < C.KNN_NUM_QUERIES)
     joined = (
@@ -120,21 +181,12 @@ def q_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("a.vec_id").alias("q_id"),
             F.col("b.vec_id").alias("neighbor_id"),
             F.expr(
-                _COS_SPARK.format(dot=_dot_spark("a.emb", "b.emb"))
+                _cos_spark("a.emb", "b.emb", "a.nrm", "b.nrm")
             ).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
     return _MEMO.fetch(
-        spark, sf_dir, "res_knn",
-        build=lambda: (
-            joined.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= C.KNN_K)
-            .select("q_id", "neighbor_id", F.col("rnk").alias("rank"),
-                    "cos_sim")
-        ),
+        spark, sf_dir, "res_knn", build=lambda: _nearest(joined, C.KNN_K)
     )
 
 
@@ -250,15 +302,14 @@ def _cached_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _emb_banded(spark, sf_dir).select("vec_id", "emb", "nrm")
 
 
-def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Banded ANN top-k: a neighbor is a candidate if it shares ANY
-    band's bucket with the query. Candidate ID-pairs are deduped across
-    bands BEFORE the cosine join via the min-band filter (map-side, no
+def _lsh_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(q_id, neighbor_id, cos_sim) for every banded-LSH candidate of
+    the query set: a neighbor is a candidate if it shares ANY band's
+    bucket with the query. Candidate ID-pairs are deduped across bands
+    BEFORE the cosine join via the min-band filter (map-side, no
     shuffle), so the 64-dim dot runs once per unique pair instead of
     once per band collision (a tight cluster collides in most of the 16
     bands — a 16x saving exactly where the data is densest)."""
-    from pyspark.sql.window import Window
-
     ids = _banded_ids(spark, sf_dir)
     cand = (
         F.broadcast(
@@ -272,33 +323,19 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("b.vec_id").alias("neighbor_id"),
         )
     )
-    e = _cached_emb(spark, sf_dir)
     # cand is bounded by the query set (KNN_NUM_QUERIES x collisions) —
     # broadcast it so both embedding joins stay scan-shaped over the
     # cached signature table instead of shuffling the corpus by vec_id
-    joined = (
-        F.broadcast(cand)
-        .join(e.alias("a"), F.col("q_id") == F.col("a.vec_id"))
-        .join(e.alias("b"), F.col("neighbor_id") == F.col("b.vec_id"))
-        .select(
-            "q_id",
-            "neighbor_id",
-            F.expr(
-                _COS_SPARK.format(dot=_dot_spark("a.emb", "b.emb"))
-            ).alias("cos_sim"),
-        )
+    return _score_pairs(
+        F.broadcast(cand), _cached_emb(spark, sf_dir), "q_id", "neighbor_id"
     )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
+
+
+def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Banded ANN top-k over the `_lsh_scored` candidates."""
     return _MEMO.fetch(
         spark, sf_dir, "res_lsh_topk",
-        build=lambda: (
-            joined.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= C.ANN_K)
-            .select("q_id", "neighbor_id", F.col("rnk").alias("rank"),
-                    "cos_sim")
-        ),
+        build=lambda: _nearest(_lsh_scored(spark, sf_dir), C.ANN_K),
     )
 
 
@@ -341,8 +378,6 @@ def q_ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands x 9 probe keys, still broadcast-sized. Candidates stay
     query-bounded; dedup is a distinct over that small set (not the
     corpus); the exact rerank and top-k window are per-query."""
-    from pyspark.sql.window import Window
-
     ids = _banded_ids(spark, sf_dir)
     p = C.EMB_PLANES_PER_BAND
     probes = (
@@ -367,30 +402,11 @@ def q_ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("q_id", F.col("b.vec_id").alias("neighbor_id"))
         .distinct()
     )
-    e = _cached_emb(spark, sf_dir)
-    joined = (
-        F.broadcast(cand)
-        .join(e.alias("a"), F.col("q_id") == F.col("a.vec_id"))
-        .join(e.alias("b"), F.col("neighbor_id") == F.col("b.vec_id"))
-        .select(
-            "q_id",
-            "neighbor_id",
-            F.expr(
-                _COS_SPARK.format(dot=_dot_spark("a.emb", "b.emb"))
-            ).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
+    scored = _score_pairs(
+        F.broadcast(cand), _cached_emb(spark, sf_dir), "q_id", "neighbor_id"
     )
     return _MEMO.fetch(
-        spark, sf_dir, "res_lsh_mp",
-        build=lambda: (
-            joined.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= C.ANN_K)
-            .select("q_id", "neighbor_id", F.col("rnk").alias("rank"),
-                    "cos_sim")
-        ),
+        spark, sf_dir, "res_lsh_mp", build=lambda: _nearest(scored, C.ANN_K)
     )
 
 
@@ -485,8 +501,6 @@ def compute_ivf_centroids(
     keep their previous centroid. The per-iteration collect is k x
     EMB_DIM doubles — the standard train-then-broadcast pattern, not a
     driver-side data loop."""
-    from pyspark.sql.window import Window
-
     e = _emb_df(spark, sf_dir)
     seed_rows = (
         e.filter(F.col("vec_id").isin(IVF_CENTROID_IDS[:k]))
@@ -494,26 +508,8 @@ def compute_ivf_centroids(
     )
     cents = [[round(float(x), 6) for x in r["emb"]] for r in seed_rows]
 
-    wc = Window.partitionBy("vec_id").orderBy(
-        F.col("c_cos").desc(), F.col("c_id")
-    )
     for _ in range(iters):
-        cdf = spark.createDataFrame(
-            [(i, c) for i, c in enumerate(cents)],
-            "c_id int, c_emb array<double>",
-        ).withColumn("c_nrm", F.expr(f"sqrt({_norm2_spark('c_emb')})"))
-        assigned = (
-            e.crossJoin(F.broadcast(cdf))
-            .select(
-                "vec_id", "emb", "c_id",
-                F.expr(
-                    f"round({_dot_spark('emb', 'c_emb')}"
-                    f" / (nrm * c_nrm), 6)"
-                ).alias("c_cos"),
-            )
-            .withColumn("crnk", F.row_number().over(wc))
-            .filter(F.col("crnk") == 1)
-        )
+        assigned = _nearest_cells(e, _cents_df(spark, cents), 1)
         means = assigned.groupBy("c_id").agg(
             *[
                 F.round(F.avg(F.col("emb").getItem(d)), 6).alias(f"d{d}")
@@ -527,9 +523,29 @@ def compute_ivf_centroids(
     return cents
 
 
-def _centroids_path(sf_dir: str) -> str:
-    from . import artifact_path
+def _cents_df(spark: SparkSession, cents: list) -> DataFrame:
+    """The centroid list as a (c_id, c_emb, c_nrm) table."""
+    return spark.createDataFrame(
+        list(enumerate(cents)), "c_id int, c_emb array<double>"
+    ).withColumn("c_nrm", F.expr(f"sqrt({_norm2_spark('c_emb')})"))
 
+
+def _nearest_cells(e: DataFrame, cents: DataFrame, n: int) -> DataFrame:
+    """Each (vec_id, emb, nrm) row's n max-cosine centroids: the
+    broadcast k-row centroid table crosses the scan, 6dp cosine, rank
+    per vec_id with the c_id tie-break. Returns (vec_id, emb, c_id,
+    c_cos, crnk); consumers select what they need (Catalyst prunes the
+    rest)."""
+    scored = e.crossJoin(F.broadcast(cents)).select(
+        "vec_id", "emb", "c_id",
+        F.expr(_cos_spark("emb", "c_emb", "nrm", "c_nrm")).alias("c_cos"),
+    )
+    return _top_k(
+        scored, "vec_id", [F.col("c_cos").desc(), F.col("c_id")], n, "crnk"
+    )
+
+
+def _centroids_path(sf_dir: str) -> str:
     return artifact_path(sf_dir, "ivf_centroids")
 
 
@@ -559,34 +575,33 @@ def _ivf_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     (~9 GB at sf0.1), and that storage pressure slowed every query
     sharing the executor; embeddings re-join from the cached signature
     table at candidate scale instead."""
-    from pyspark.sql.window import Window
+    return _MEMO.fetch(
+        spark, sf_dir, "ivf_ranked",
+        build=lambda: _nearest_cells(
+            _cached_emb(spark, sf_dir),
+            _cents_df(spark, ivf_centroids(spark, sf_dir)),
+            IVF_NPROBE,
+        ).select("vec_id", F.col("c_id").alias("cell"), "crnk"),
+    )
 
-    def build() -> DataFrame:
-        cents = spark.createDataFrame(
-            [(i, c) for i, c in enumerate(ivf_centroids(spark, sf_dir))],
-            "c_id int, c_emb array<double>",
-        ).withColumn("c_nrm", F.expr(f"sqrt({_norm2_spark('c_emb')})"))
-        scored = (
-            _cached_emb(spark, sf_dir).alias("s")
-            .crossJoin(F.broadcast(cents))
-            .select(
-                "s.vec_id", "c_id",
-                F.expr(
-                    f"round({_dot_spark('s.emb', 'c_emb')}"
-                    f" / (s.nrm * c_nrm), 6)"
-                ).alias("c_cos"),
-            )
-        )
-        wc = Window.partitionBy("vec_id").orderBy(
-            F.col("c_cos").desc(), F.col("c_id")
-        )
-        return (
-            scored.withColumn("crnk", F.row_number().over(wc))
-            .filter(F.col("crnk") <= IVF_NPROBE)
-            .select("vec_id", F.col("c_id").alias("cell"), "crnk")
-        )
 
-    return _MEMO.fetch(spark, sf_dir, "ivf_ranked", build=build)
+def _ivf_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(q_id, cell, neighbor_id): every member (home cell, crnk 1) of
+    each query's IVF_NPROBE probed cells; the probe side is the
+    broadcast query set."""
+    ranked_cells = _ivf_ranked(spark, sf_dir)
+    members = ranked_cells.filter(F.col("crnk") == 1).select(
+        "vec_id", "cell"
+    )
+    probes = ranked_cells.filter(
+        F.col("vec_id") < C.KNN_NUM_QUERIES
+    ).select(F.col("vec_id").alias("q_id"), "cell")
+    return (
+        F.broadcast(probes)
+        .join(members, "cell")
+        .filter(F.col("q_id") != F.col("vec_id"))
+        .select("q_id", "cell", F.col("vec_id").alias("neighbor_id"))
+    )
 
 
 def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -597,52 +612,16 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     is needed. Centroids come from the offline deterministic k-means
     artifact (compute_ivf_centroids / tools/gen_centroids.py) — the
     train-once-broadcast-everywhere production shape."""
-    from pyspark.sql.window import Window
-
-    e = _cached_emb(spark, sf_dir)
-    ranked_cells = _ivf_ranked(spark, sf_dir)
-    assigned = ranked_cells.filter(F.col("crnk") == 1).select(
-        "vec_id", "cell"
-    )
-    probes = ranked_cells.filter(
-        F.col("vec_id") < C.KNN_NUM_QUERIES
-    ).select("vec_id", "cell")
-    pairs = (
-        F.broadcast(probes).alias("a")
-        .join(assigned.alias("b"), on="cell")
-        .filter(F.col("a.vec_id") != F.col("b.vec_id"))
-        .select(
-            F.col("a.vec_id").alias("q_id"),
-            F.col("cell"),
-            F.col("b.vec_id").alias("neighbor_id"),
-        )
-    )
-    # pairs is bounded by queries x probed-cell membership — broadcast
-    # it so the embedding joins stay scan-shaped (no corpus shuffle)
-    joined = (
-        F.broadcast(pairs)
-        .join(e.alias("a"), F.col("q_id") == F.col("a.vec_id"))
-        .join(e.alias("b"), F.col("neighbor_id") == F.col("b.vec_id"))
-        .select(
-            "q_id", "cell", "neighbor_id",
-            F.expr(
-                _COS_SPARK.format(dot=_dot_spark("a.emb", "b.emb"))
-            ).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
+    # the pairs are bounded by queries x probed-cell membership —
+    # broadcast them so the embedding joins stay scan-shaped (no corpus
+    # shuffle)
+    scored = _score_pairs(
+        F.broadcast(_ivf_candidates(spark, sf_dir)),
+        _cached_emb(spark, sf_dir), "q_id", "neighbor_id",
     )
     return _MEMO.fetch(
         spark, sf_dir, "res_ivf_topk",
-        build=lambda: (
-            joined.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= C.ANN_K)
-            .select(
-                "q_id", "cell", "neighbor_id", F.col("rnk").alias("rank"),
-                "cos_sim",
-            )
-        ),
+        build=lambda: _nearest(scored, C.ANN_K, "cell"),
     )
 
 
@@ -776,19 +755,9 @@ def _compute_neardup_cosine(
             F.col("a.vec_id").alias("vec_a"),
             F.col("b.vec_id").alias("vec_b"),
         )
-    e = _cached_emb(spark, sf_dir)
-    joined = (
-        cand.join(e.alias("a"), F.col("vec_a") == F.col("a.vec_id"))
-        .join(e.alias("b"), F.col("vec_b") == F.col("b.vec_id"))
-        .select(
-            "vec_a",
-            "vec_b",
-            F.expr(
-                _COS_SPARK.format(dot=_dot_spark("a.emb", "b.emb"))
-            ).alias("cos_sim"),
-        )
-    )
-    return joined.filter(F.col("cos_sim") >= C.COSINE_NEARDUP_THRESHOLD)
+    return _score_pairs(
+        cand, _cached_emb(spark, sf_dir), "vec_a", "vec_b"
+    ).filter(F.col("cos_sim") >= C.COSINE_NEARDUP_THRESHOLD)
 
 
 def sql_neardup_cosine() -> str:
@@ -872,6 +841,46 @@ def sql_semdedup_clusters() -> str:
 # ANN recall@k evaluation report
 # ---------------------------------------------------------------------------
 
+def _recall_report(
+    spark: SparkSession, sf_dir: str, truth: DataFrame, k: int, searches
+) -> DataFrame:
+    """One row per (method, searcher, floor_micro) in `searches`: the
+    searcher's hits against `truth` (q_id, neighbor_id), with recall@k
+    as an exact micro-unit BIGINT and the floor asserted in-query.
+
+    The truth table is K rows/query but its producer is a
+    broadcast-query x corpus distance scan; without pinning it the plan
+    re-evaluates that scan for each report's hits and t_cnt crossJoin
+    (measured 12.2 -> ~5 s quiet-JVM at sf0.1 for ann_recall).
+    localCheckpoint materializes the ~queries*K rows once."""
+    truth = truth.localCheckpoint()
+    t_cnt = truth.agg(F.count("*").cast("bigint").alias("n_truth"))
+    reports = []
+    for method, qf, floor in searches:
+        hits = (
+            qf(spark, sf_dir)
+            .select("q_id", "neighbor_id")
+            .join(truth, ["q_id", "neighbor_id"], "left_semi")
+            .agg(F.count("*").cast("bigint").alias("n_hits"))
+        )
+        reports.append(
+            hits.crossJoin(t_cnt).select(
+                F.lit(method).alias("method"),
+                F.lit(k).cast("bigint").alias("k"),
+                "n_truth",
+                "n_hits",
+                F.expr(
+                    "cast(n_hits * 1000000 div n_truth as bigint)"
+                ).alias("recall_micro"),
+                F.lit(floor).cast("bigint").alias("floor_micro"),
+                F.expr(
+                    f"n_hits * 1000000 div n_truth >= {floor}"
+                ).alias("meets_floor"),
+            )
+        )
+    return reduce(DataFrame.unionByName, reports)
+
+
 def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One row per ANN method (IVF-flat, banded LSH, multi-probe LSH):
     hits against the exact brute-force top-ANN_K truth over the same
@@ -885,52 +894,19 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k over the broadcast query set, the three ANN rankings); the
     joins are query-set-sized (K rows per query), nothing corpus-wide
     runs here."""
-    # the truth table is K rows/query but its producer is the
-    # broadcast-query x corpus distance scan; without pinning it the
-    # plan below re-evaluates that scan 4x (each report's hits + its
-    # t_cnt crossJoin) — measured 12.2 -> ~5 s quiet-JVM at sf0.1.
-    # localCheckpoint materializes the ~queries*K rows once.
     truth = (
         q_knn_bruteforce(spark, sf_dir)
         .filter(F.col("rank") <= C.ANN_K)
         .select("q_id", "neighbor_id")
-        .localCheckpoint()
     )
-    t_cnt = truth.agg(
-        F.count("*").cast("bigint").alias("n_truth")
-    )
-    reports = []
-    for method, qf in (
-        ("ivf", q_ann_ivf_topk),
-        ("lsh", q_ann_lsh_topk),
-        ("lsh_mp", q_ann_lsh_multiprobe),
-    ):
-        hits = (
-            qf(spark, sf_dir)
-            .select("q_id", "neighbor_id")
-            .join(truth, ["q_id", "neighbor_id"], "left_semi")
-            .agg(F.count("*").cast("bigint").alias("n_hits"))
+    return _recall_report(spark, sf_dir, truth, C.ANN_K, [
+        (method, qf, ANN_RECALL_FLOOR_MICRO[method])
+        for method, qf in (
+            ("ivf", q_ann_ivf_topk),
+            ("lsh", q_ann_lsh_topk),
+            ("lsh_mp", q_ann_lsh_multiprobe),
         )
-        floor = ANN_RECALL_FLOOR_MICRO[method]
-        reports.append(
-            hits.crossJoin(t_cnt).select(
-                F.lit(method).alias("method"),
-                F.lit(C.ANN_K).cast("bigint").alias("k"),
-                "n_truth",
-                "n_hits",
-                F.expr(
-                    "cast(n_hits * 1000000 div n_truth as bigint)"
-                ).alias("recall_micro"),
-                F.lit(floor).cast("bigint").alias("floor_micro"),
-                F.expr(
-                    f"n_hits * 1000000 div n_truth >= {floor}"
-                ).alias("meets_floor"),
-            )
-        )
-    out = reports[0]
-    for r in reports[1:]:
-        out = out.unionByName(r)
-    return out
+    ])
 
 
 def sql_ann_recall(sf_dir: str = "/root/testdata/sf0.01") -> str:
@@ -985,39 +961,16 @@ def sql_ann_recall(sf_dir: str = "/root/testdata/sf0.01") -> str:
 
 
 def _centroid_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared max-cosine centroid assignment: broadcast k-row centroid
-    table onto the cached embedding scan, 6dp-rounded cosine, argmax
-    per vec_id with the c_id tie-break. Returns (vec_id, c_id, c_cos,
-    emb); consumers select what they need (Catalyst prunes the rest).
-    ONE definition of the assignment contract — ivf_cluster_stats,
-    kmeans_step and cluster_topics all ride it, so a change to the
+    """Each vector's home cell as (vec_id, c_id, c_cos, emb): the
+    `_nearest_cells` argmax over the sf's IVF centroids. ONE definition
+    of the assignment contract — ivf_cluster_stats, kmeans_step,
+    cluster_topics and cluster_purity all ride it, so a change to the
     rounding or tie-break cannot drift between them."""
-    from pyspark.sql.window import Window
-
-    e = _cached_emb(spark, sf_dir)
-    cents = spark.createDataFrame(
-        [(i, c) for i, c in enumerate(ivf_centroids(spark, sf_dir))],
-        "c_id int, c_emb array<double>",
-    ).withColumn("c_nrm", F.expr(f"sqrt({_norm2_spark('c_emb')})"))
-    scored = (
-        e.alias("s")
-        .crossJoin(F.broadcast(cents))
-        .select(
-            "s.vec_id", "s.emb", "c_id",
-            F.expr(
-                f"round({_dot_spark('s.emb', 'c_emb')}"
-                f" / (s.nrm * c_nrm), 6)"
-            ).alias("c_cos"),
-        )
-    )
-    wc = Window.partitionBy("vec_id").orderBy(
-        F.col("c_cos").desc(), F.col("c_id")
-    )
-    return (
-        scored.withColumn("crnk", F.row_number().over(wc))
-        .filter(F.col("crnk") == 1)
-        .select("vec_id", "c_id", "c_cos", "emb")
-    )
+    return _nearest_cells(
+        _cached_emb(spark, sf_dir),
+        _cents_df(spark, ivf_centroids(spark, sf_dir)),
+        1,
+    ).select("vec_id", "c_id", "c_cos", "emb")
 
 
 def _assign_cte_duck(sf_dir: str) -> str:
@@ -1123,12 +1076,7 @@ PQ_SEED_IDS = list(range(200, 200 + PQ_KS))
 
 
 def _pq_path(sf_dir: str) -> str:
-    import os
-
-    sf = os.path.basename(os.path.normpath(sf_dir)).replace("sf", "")
-    repo = os.path.dirname(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))))
-    return os.path.join(repo, "goldens", f"pq_codebooks_sf{sf}.json")
+    return artifact_path(sf_dir, "pq_codebooks")
 
 
 def _pq_subvecs(e: DataFrame) -> DataFrame:
@@ -1151,6 +1099,29 @@ _L2_SPARK = (
 )
 
 
+def _pq_cdf(spark: SparkSession, books: list) -> DataFrame:
+    """The codebooks as an (m, c_id, c_sub) table."""
+    return spark.createDataFrame(
+        [(m, c, sub) for m, book in enumerate(books)
+         for c, sub in enumerate(book)],
+        "m int, c_id int, c_sub array<double>",
+    )
+
+
+def _pq_nearest(subs: DataFrame, cdf: DataFrame) -> DataFrame:
+    """Each (vec_id, m, sub) subvector's nearest codebook centroid (L2,
+    ties: lower c_id) as (vec_id, m, c_id, sub, d): the broadcast
+    codebook joins on the subspace, argmin per (vec_id, m)."""
+    scored = subs.join(F.broadcast(cdf), "m").select(
+        "vec_id", "m", "c_id", "sub",
+        F.expr(_L2_SPARK.format(a="sub", b="c_sub")).alias("d"),
+    )
+    return _top_k(
+        scored, ["vec_id", "m"], [F.col("d").asc(), F.col("c_id").asc()], 1,
+        "rn",
+    )
+
+
 def compute_pq_codebooks(
     spark: SparkSession,
     sf_dir: str,
@@ -1164,8 +1135,6 @@ def compute_pq_codebooks(
     their previous centroid; the per-step collect is
     PQ_M x PQ_KS x PQ_SUBDIM doubles). Returns
     codebooks[m][c] = list of PQ_SUBDIM floats."""
-    from pyspark.sql.window import Window
-
     e = _emb_df(spark, sf_dir)
     seeds = (
         e.filter(F.col("vec_id").isin(PQ_SEED_IDS[:ks]))
@@ -1182,29 +1151,8 @@ def compute_pq_codebooks(
         for m in range(PQ_M)
     ]
     subs = _pq_subvecs(e)
-    w = Window.partitionBy("vec_id", "m").orderBy(
-        F.col("d").asc(), F.col("c_id").asc()
-    )
     for _ in range(iters):
-        cdf = spark.createDataFrame(
-            [
-                (m, c, books[m][c])
-                for m in range(PQ_M)
-                for c in range(ks)
-            ],
-            "m int, c_id int, c_sub array<double>",
-        )
-        assigned = (
-            subs.join(F.broadcast(cdf), "m")
-            .select(
-                "vec_id", "m", "c_id", "sub",
-                F.expr(
-                    _L2_SPARK.format(a="sub", b="c_sub")
-                ).alias("d"),
-            )
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-        )
+        assigned = _pq_nearest(subs, _pq_cdf(spark, books))
         means = (
             assigned.select(
                 "m", "c_id", F.posexplode("sub").alias("pos", "x")
@@ -1237,18 +1185,6 @@ def pq_codebooks(spark: SparkSession, sf_dir: str) -> list:
         build=lambda: compute_pq_codebooks(spark, sf_dir))
 
 
-def _pq_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    books = pq_codebooks(spark, sf_dir)
-    return spark.createDataFrame(
-        [
-            (m, c, books[m][c])
-            for m in range(PQ_M)
-            for c in range(PQ_KS)
-        ],
-        "m int, c_id int, c_sub array<double>",
-    )
-
-
 def q_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ codes: one row per (vec_id, subspace) with the assigned
     centroid code and the quantization error in exact micro units.
@@ -1262,35 +1198,20 @@ def q_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-query analog of that materialization): pq_search, ivfpq_search
     and pq_recall all consume it, and without the pin each consumer
     re-runs the encode window over the corpus."""
-    from pyspark.sql.window import Window
-
-    def build() -> DataFrame:
-        e = _cached_emb(spark, sf_dir).select(
-            "vec_id", F.col("emb")
-        )
-        subs = _pq_subvecs(e)
-        w = Window.partitionBy("vec_id", "m").orderBy(
-            F.col("d").asc(), F.col("c_id").asc()
-        )
-        return (
-            subs.join(F.broadcast(_pq_cdf(spark, sf_dir)), "m")
-            .select(
-                "vec_id", "m", "c_id",
-                F.expr(_L2_SPARK.format(a="sub", b="c_sub")).alias("d"),
-            )
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select(
-                F.col("vec_id").cast("bigint").alias("vec_id"),
-                F.col("m").cast("bigint").alias("m"),
-                F.col("c_id").cast("bigint").alias("code"),
-                F.expr("cast(round(d * 1000000) as bigint)").alias(
-                    "qerr_micro"
-                ),
-            )
-        )
-
-    return _MEMO.fetch(spark, sf_dir, "pq_codes", build=build)
+    return _MEMO.fetch(
+        spark, sf_dir, "pq_codes",
+        build=lambda: _pq_nearest(
+            _pq_subvecs(_cached_emb(spark, sf_dir)),
+            _pq_cdf(spark, pq_codebooks(spark, sf_dir)),
+        ).select(
+            F.col("vec_id").cast("bigint").alias("vec_id"),
+            F.col("m").cast("bigint").alias("m"),
+            F.col("c_id").cast("bigint").alias("code"),
+            F.expr("cast(round(d * 1000000) as bigint)").alias(
+                "qerr_micro"
+            ),
+        ),
+    )
 
 
 def _pq_query_lut(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1302,13 +1223,34 @@ def _pq_query_lut(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("vec_id") < C.KNN_NUM_QUERIES)
         .select("vec_id", "emb")
     ).withColumnRenamed("vec_id", "q_id")
-    return q.join(F.broadcast(_pq_cdf(spark, sf_dir)), "m").select(
+    cdf = _pq_cdf(spark, pq_codebooks(spark, sf_dir))
+    return q.join(F.broadcast(cdf), "m").select(
         "q_id", "m", F.col("c_id").alias("code"),
         F.expr(
             "cast(round("
             + _L2_SPARK.format(a="sub", b="c_sub")
             + " * 1000000) as bigint)"
         ).alias("lut_micro"),
+    )
+
+
+def _adc_nearest(looked_up: DataFrame) -> DataFrame:
+    """Each query's KNN_K nearest vectors by ADC: the (q_id, vec_id,
+    lut_micro) lookups summed per pair (micro-integerised before the
+    sum, so the total is exact in any partition order), ranked
+    ascending with the vec_id tie-break, as (q_id, neighbor_id,
+    adc_micro, rnk)."""
+    scored = looked_up.groupBy("q_id", "vec_id").agg(
+        F.sum("lut_micro").cast("bigint").alias("adc_micro")
+    )
+    return _top_k(
+        scored, "q_id", [F.col("adc_micro").asc(), F.col("vec_id").asc()],
+        C.KNN_K,
+    ).select(
+        "q_id",
+        F.col("vec_id").alias("neighbor_id"),
+        "adc_micro",
+        F.col("rnk").cast("bigint").alias("rnk"),
     )
 
 
@@ -1323,31 +1265,14 @@ def q_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     (lm_score discipline), so the ADC total is an exact integer in any
     partition order. Plan shape = knn_bruteforce: broadcast query LUTs
     x code-table scan, per-query top-k window."""
-    from pyspark.sql.window import Window
-
-    codes = q_pq_encode(spark, sf_dir)
-    lut = _pq_query_lut(spark, sf_dir)
-    scored = (
-        codes.join(F.broadcast(lut), ["m", "code"])
+    looked_up = (
+        q_pq_encode(spark, sf_dir)
+        .join(F.broadcast(_pq_query_lut(spark, sf_dir)), ["m", "code"])
         .filter(F.col("vec_id") != F.col("q_id"))
-        .groupBy("q_id", "vec_id")
-        .agg(F.sum("lut_micro").cast("bigint").alias("adc_micro"))
-    )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("adc_micro").asc(), F.col("vec_id").asc()
     )
     return _MEMO.fetch(
         spark, sf_dir, "res_pq_search",
-        build=lambda: (
-            scored.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= C.KNN_K)
-            .select(
-                "q_id",
-                F.col("vec_id").alias("neighbor_id"),
-                "adc_micro",
-                F.col("rnk").cast("bigint").alias("rnk"),
-            )
-        ),
+        build=lambda: _adc_nearest(looked_up),
     )
 
 
@@ -1458,47 +1383,19 @@ def q_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     and BROADCASTS into the code join; per-subspace distances are
     micro-integerised before the order-independent ADC sum; top-k is a
     per-query window over candidates only."""
-    from pyspark.sql.window import Window
-
-    # candidate (q_id, vec_id) pairs via the IVF cell machinery
-    # (same memoized ranking q_ann_ivf_topk reads)
-    ranked_cells = _ivf_ranked(spark, sf_dir)
-    assigned = ranked_cells.filter(F.col("crnk") == 1).select(
-        "vec_id", "cell"
+    cand = _ivf_candidates(spark, sf_dir).select(
+        "q_id", F.col("neighbor_id").alias("vec_id")
     )
-    probes = ranked_cells.filter(
-        (F.col("crnk") <= IVF_NPROBE)
-        & (F.col("vec_id") < C.KNN_NUM_QUERIES)
-    ).select(F.col("vec_id").alias("q_id"), "cell")
-    cand = (
-        F.broadcast(probes)
-        .join(assigned, "cell")
-        .filter(F.col("q_id") != F.col("vec_id"))
-        .select("q_id", "vec_id")
-    )
-    codes = q_pq_encode(spark, sf_dir)
-    lut = _pq_query_lut(spark, sf_dir)
-    scored = (
-        codes.join(F.broadcast(cand), "vec_id")
-        .join(F.broadcast(lut), ["q_id", "m", "code"])
-        .groupBy("q_id", "vec_id")
-        .agg(F.sum("lut_micro").cast("bigint").alias("adc_micro"))
-    )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("adc_micro").asc(), F.col("vec_id").asc()
+    looked_up = (
+        q_pq_encode(spark, sf_dir)
+        .join(F.broadcast(cand), "vec_id")
+        .join(
+            F.broadcast(_pq_query_lut(spark, sf_dir)), ["q_id", "m", "code"]
+        )
     )
     return _MEMO.fetch(
         spark, sf_dir, "res_ivfpq_search",
-        build=lambda: (
-            scored.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= C.KNN_K)
-            .select(
-                "q_id",
-                F.col("vec_id").alias("neighbor_id"),
-                "adc_micro",
-                F.col("rnk").cast("bigint").alias("rnk"),
-            )
-        ),
+        build=lambda: _adc_nearest(looked_up),
     )
 
 
@@ -1574,24 +1471,19 @@ def _l2_truth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact L2 top-KNN_K per query — the ground truth ADC answers
     approximate (cosine truth would mis-grade an L2 quantizer).
     Broadcast-query x corpus scan, same plan shape as knn_bruteforce."""
-    from pyspark.sql.window import Window
-
     e = _cached_emb(spark, sf_dir)
     q = e.filter(F.col("vec_id") < C.KNN_NUM_QUERIES).select(
         F.col("vec_id").alias("q_id"), F.col("emb").alias("q_emb")
     )
     d = _L2_SPARK.format(a="q_emb", b="emb")
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("d").asc(), F.col("vec_id").asc()
-    )
-    return (
+    scored = (
         e.crossJoin(F.broadcast(q))
         .filter(F.col("vec_id") != F.col("q_id"))
         .select("q_id", "vec_id", F.expr(d).alias("d"))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= C.KNN_K)
-        .select("q_id", F.col("vec_id").alias("neighbor_id"))
     )
+    return _top_k(
+        scored, "q_id", [F.col("d").asc(), F.col("vec_id").asc()], C.KNN_K
+    ).select("q_id", F.col("vec_id").alias("neighbor_id"))
 
 
 def q_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1599,39 +1491,11 @@ def q_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     row per method with the floor asserted in-query — the ann_recall
     discipline applied to the quantized index (an honest, gate-checked
     operating point instead of a doc figure)."""
-    # pin the tiny truth table: its producer is the exact-L2 corpus
-    # scan, otherwise re-evaluated 4x across the two reports (same fix
-    # as q_ann_recall)
-    truth = _l2_truth(spark, sf_dir).localCheckpoint()
-    t_cnt = truth.agg(F.count("*").cast("bigint").alias("n_truth"))
-    floor = PQ_RECALL_FLOOR_MICRO
-    reports = []
-    for method, qf in (("pq", q_pq_search), ("ivfpq", q_ivfpq_search)):
-        hits = (
-            qf(spark, sf_dir)
-            .select("q_id", "neighbor_id")
-            .join(truth, ["q_id", "neighbor_id"], "left_semi")
-            .agg(F.count("*").cast("bigint").alias("n_hits"))
-        )
-        reports.append(
-            hits.crossJoin(t_cnt).select(
-                F.lit(method).alias("method"),
-                F.lit(C.KNN_K).cast("bigint").alias("k"),
-                "n_truth",
-                "n_hits",
-                F.expr(
-                    "cast(n_hits * 1000000 div n_truth as bigint)"
-                ).alias("recall_micro"),
-                F.lit(floor).cast("bigint").alias("floor_micro"),
-                F.expr(
-                    f"n_hits * 1000000 div n_truth >= {floor}"
-                ).alias("meets_floor"),
-            )
-        )
-    out = reports[0]
-    for r in reports[1:]:
-        out = out.unionByName(r)
-    return out
+    return _recall_report(
+        spark, sf_dir, _l2_truth(spark, sf_dir), C.KNN_K,
+        [(method, qf, PQ_RECALL_FLOOR_MICRO)
+         for method, qf in (("pq", q_pq_search), ("ivfpq", q_ivfpq_search))],
+    )
 
 
 def sql_pq_recall(sf_dir: str = "/root/testdata/sf0.01") -> str:
@@ -1713,10 +1577,7 @@ def q_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     means re-broadcasting k x dim doubles per round — the same
     train-loop shape as compute_ivf_centroids, evidenced here as an
     oracle-checked query. Reference analog: none (SURVEY.md §2.8)."""
-    cents = spark.createDataFrame(
-        [(i, c) for i, c in enumerate(ivf_centroids(spark, sf_dir))],
-        "c_id int, c_emb array<double>",
-    )
+    cents = _cents_df(spark, ivf_centroids(spark, sf_dir))
     assigned = _centroid_assign(spark, sf_dir).select(
         "vec_id", "c_id", "emb"
     )
@@ -1810,9 +1671,6 @@ def q_cluster_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
     output bounded by k x vocab, and the ranking window partitions on
     the k-sized c_id key over vocab-bounded rows, never the corpus.
     Reference analog: none (SURVEY.md §2.8)."""
-    from pyspark.sql.window import Window
-
-    from . import read_spread
     from .textstats import TOKENS_SPARK
 
     assigned = _centroid_assign(spark, sf_dir).select("vec_id", "c_id")
@@ -1823,13 +1681,11 @@ def q_cluster_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = assigned.join(docs, "vec_id").groupBy("c_id", "term").agg(
         F.count("*").cast("bigint").alias("cnt")
     )
-    wt = Window.partitionBy("c_id").orderBy(
-        F.col("cnt").desc(), F.col("term")
-    )
     return (
-        counts.withColumn("rk", F.row_number().over(wt))
-        .filter(F.col("rk") <= TOPIC_TOP_K)
-        .select(
+        _top_k(
+            counts, "c_id", [F.col("cnt").desc(), F.col("term")],
+            TOPIC_TOP_K, "rk",
+        ).select(
             F.col("c_id").cast("bigint").alias("c_id"),
             F.col("rk").cast("bigint").alias("rk"),
             "term", "cnt",
@@ -1975,10 +1831,6 @@ def q_bitext_mine(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the banded-LSH / IVF candidate machinery already in this module
     (ann_lsh_topk pattern) and keeps this exact path as its recall
     oracle. Per-query state is the top-K window, never corpus-wide."""
-    from pyspark.sql.window import Window
-
-    from . import read_spread
-
     e = _cached_emb(spark, sf_dir)
     langs = read_spread(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("vec_id"), "lang"
@@ -2001,16 +1853,14 @@ def q_bitext_mine(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "q_id", "q_lang", "t_id",
             F.expr(
-                f"cast(round(round({_dot_spark('emb', 'q_emb')}"
-                " / (nrm * q_nrm), 6) * 1000000) as bigint)"
+                f"cast(round({_cos_spark('emb', 'q_emb', 'nrm', 'q_nrm')}"
+                " * 1000000) as bigint)"
             ).alias("cos_micro"),
         )
     )
-    wq = Window.partitionBy("q_id").orderBy(
-        F.col("cos_micro").desc(), F.col("t_id")
-    )
-    topk = scored.withColumn("rk", F.row_number().over(wq)).filter(
-        F.col("rk") <= BITEXT_MARGIN_K
+    topk = _top_k(
+        scored, "q_id", [F.col("cos_micro").desc(), F.col("t_id")],
+        BITEXT_MARGIN_K, "rk",
     )
     return topk.groupBy("q_id", "q_lang").agg(
         F.expr("max(case when rk = 1 then t_id end)").alias("best_en"),
@@ -2134,8 +1984,6 @@ def q_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     once and everything downstream is dimension-sized. Reference
     analog: none (SURVEY.md §2.8).
     """
-    from pyspark.sql.window import Window
-
     labels = read_spread(spark, sf_dir, "embeddings").select(
         "vec_id", "label"
     )

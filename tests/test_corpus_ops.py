@@ -452,14 +452,96 @@ def test_neardup_hot_bucket_cap(spark):
 
 
 def test_neardup_cosine_hot_bucket_cap(spark):
-    from docling_core_spark.corpus.similarity import q_neardup_cosine
+    """A cap drops whole (band_id, bucket) groups: a cap at least the
+    largest bucket drops none (exactly the uncapped pairs), a cap of 1
+    drops every bucket that could hold a pair, and anything between
+    yields a subset."""
+    from docling_core_spark.corpus.similarity import (
+        q_lsh_bucket_stats, q_neardup_cosine,
+    )
 
     sf = "/root/testdata/sf0.001"
-    full = {(r["vec_a"], r["vec_b"])
-            for r in q_neardup_cosine(spark, sf).collect()}
-    capped = {(r["vec_a"], r["vec_b"])
-              for r in q_neardup_cosine(spark, sf, max_bucket=3).collect()}
-    assert capped <= full
+
+    def pairs(cap):
+        return {(r["vec_a"], r["vec_b"])
+                for r in q_neardup_cosine(spark, sf, max_bucket=cap).collect()}
+
+    full = pairs(0)
+    assert full
+    assert pairs(3) <= full
+    largest = max(r["n_vecs"] for r in q_lsh_bucket_stats(spark, sf).collect())
+    assert pairs(largest) == full
+    assert pairs(1) == set()
+
+
+def test_top_k_ties_small_groups_and_rank_column(spark):
+    """`_top_k` breaks first-key ties on the second key, keeps every
+    row of a group smaller than k, and numbers rows 1..k in the named
+    column."""
+    from pyspark.sql import functions as F
+
+    from docling_core_spark.corpus.similarity import _top_k
+
+    df = spark.createDataFrame(
+        [(1, 0.9, 5), (1, 0.9, 3), (1, 0.5, 1), (1, 0.1, 0), (2, 0.7, 9)],
+        "g int, s double, id int",
+    )
+    out = _top_k(df, "g", [F.col("s").desc(), F.col("id")], 3, "pos")
+    assert out.columns == ["g", "s", "id", "pos"]
+    assert sorted((r.g, r.pos, r.id) for r in out.collect()) == [
+        (1, 1, 3), (1, 2, 5), (1, 3, 1), (2, 1, 9),
+    ]
+    assert _top_k(df, ["g"], [F.col("id")], 1).columns[-1] == "rnk"
+
+
+def test_score_pairs_matches_numpy_cosine(spark):
+    """`_score_pairs` keeps the candidate columns and adds cos_sim =
+    round(dot / (|a| |b|), 6), negative components included."""
+    import numpy as np
+
+    from docling_core_spark.corpus.similarity import _score_pairs
+
+    vecs = {
+        1: [1.0, -2.0, 0.5, 3.25],
+        2: [-0.3, 0.8, -1.5, 0.1],
+        3: [2.0, 2.0, -2.0, -0.7],
+        4: [-1.0, -0.25, 0.75, -4.0],
+    }
+    e = spark.createDataFrame(
+        [(k, v, float(np.sqrt(np.dot(v, v)))) for k, v in vecs.items()],
+        "vec_id int, emb array<double>, nrm double",
+    )
+    cand = spark.createDataFrame(
+        [(1, 2), (1, 3), (2, 4), (3, 4), (4, 1), (2, 2)], "x int, y int"
+    )
+    out = _score_pairs(cand, e, "x", "y")
+    assert out.columns == ["x", "y", "cos_sim"]
+    got = {(r.x, r.y): r.cos_sim for r in out.collect()}
+    assert set(got) == {(1, 2), (1, 3), (2, 4), (3, 4), (4, 1), (2, 2)}
+    for (x, y), cos in got.items():
+        a, b = np.array(vecs[x]), np.array(vecs[y])
+        want = round(float(a @ b) / (np.linalg.norm(a) * np.linalg.norm(b)), 6)
+        assert cos == want, (x, y, cos, want)
+
+
+def test_centroid_assign_agrees_with_ivf_ranking(spark):
+    """One assignment contract: every vector's home cell
+    (`_centroid_assign`) is the first cell of its IVF probe ranking
+    (`_ivf_ranked`, crnk == 1)."""
+    from pyspark.sql import functions as F
+
+    from docling_core_spark.corpus.similarity import (
+        _centroid_assign, _ivf_ranked,
+    )
+
+    home = {r.vec_id: r.c_id
+            for r in _centroid_assign(spark, SF_DIR).collect()}
+    first = {r.vec_id: r.cell
+             for r in _ivf_ranked(spark, SF_DIR)
+             .filter(F.col("crnk") == 1).collect()}
+    n = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").count()
+    assert len(home) == n
+    assert home == first
 
 
 def test_ann_recall_report_consistent(spark):
