@@ -17,10 +17,25 @@ lacks (PIL, tabulate) are stubbed:
 from __future__ import annotations
 
 import importlib.metadata as _md
+import os
 import sys
 import types
 
+import pytest
+
 REFERENCE_PATH = "/root/reference"
+
+
+def needs_path(path):
+    """Skip a test unless `path` (the checkout or one of its data files)
+    exists; the reason names the missing path."""
+    return pytest.mark.skipif(
+        not os.path.exists(path), reason=f"reference missing: {path}"
+    )
+
+
+# every test that imports docling_core through install_reference()
+needs_reference = needs_path(REFERENCE_PATH)
 
 _installed = False
 

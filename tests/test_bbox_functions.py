@@ -13,7 +13,7 @@ import pytest
 
 from docling_core_spark.functions import bbox as B
 
-from ref_oracle import ref_modules
+from ref_oracle import needs_reference, ref_modules
 
 
 def _rand_boxes(n=200, seed=7):
@@ -38,6 +38,7 @@ def _sql_eval(con, template, a, b):
     return float(val) if not isinstance(val, bool) else val
 
 
+@needs_reference
 @pytest.mark.parametrize(
     "template,ref_fn",
     [
@@ -87,6 +88,7 @@ def test_template_matches_reference(template, ref_fn):
             )
 
 
+@needs_reference
 def test_origin_flip_matches_reference():
     R = ref_modules()
     con = duckdb.connect()

@@ -17,11 +17,12 @@ from docling_core_spark.chunk.hybrid import (
 from docling_core_spark.fixtures import SHAPE_IDS, gen_spans
 from docling_core_spark.parse.spans import parse_span_doc
 
-from ref_oracle import build_ref_doc, install_reference
+from ref_oracle import build_ref_doc, install_reference, needs_reference
 
 DOC_IDS = list(SHAPE_IDS) + [f"doc-{i:08d}" for i in range(16)]
 
 
+@needs_reference
 @pytest.mark.parametrize("doc_id", DOC_IDS)
 def test_hierarchical_matches_reference(doc_id):
     """(text, headings, doc_item refs) triple-equality per chunk against
@@ -54,6 +55,7 @@ def _doc(doc_id="doc-00000003"):
     return doc
 
 
+@needs_reference
 @pytest.mark.parametrize("doc_id", DOC_IDS)
 def test_hybrid_matches_reference(doc_id):
     """The reference's OWN HybridChunker (hybrid_chunker.py:295-323),

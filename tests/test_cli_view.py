@@ -13,7 +13,7 @@ from docling_core_spark.fixtures import gen_spans
 from docling_core_spark.model.json_io import to_reference_json
 from docling_core_spark.parse.spans import parse_span_doc
 
-from ref_oracle import install_reference
+from ref_oracle import install_reference, needs_reference
 
 DOC_ID = "doc-00000003"
 
@@ -26,6 +26,7 @@ def json_file(tmp_path):
     return p
 
 
+@needs_reference
 def test_view_html_matches_reference_chain(json_file, tmp_path):
     """Same bytes the reference viewer would write: its chain is
     load_from_json -> export_to_html(image_mode=EMBEDDED)."""

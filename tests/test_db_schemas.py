@@ -14,11 +14,10 @@ them via jsonschema, and the search-index mapper consumes them.
 
 import glob
 import json
-import os
 
 import pytest
 
-from ref_oracle import REFERENCE_PATH, install_reference
+from ref_oracle import install_reference, needs_reference
 
 from docling_core_spark.model.schema_gen import (
     generate_generic_schema,
@@ -31,8 +30,6 @@ from test_schema_gen import _def_shape, _prop_shape
 
 
 def _ref_schema(which):
-    if not os.path.isdir(REFERENCE_PATH):
-        pytest.skip(f"reference checkout missing: {REFERENCE_PATH}")
     install_reference()
     if which == "record":
         from docling_core.types.rec.record import Record
@@ -54,6 +51,7 @@ _OURS = {
 }
 
 
+@needs_reference
 @pytest.mark.parametrize("which", sorted(_OURS))
 def test_structure_matches_reference(which):
     ref = _ref_schema(which)
@@ -72,6 +70,7 @@ def test_structure_matches_reference(which):
         assert _prop_shape(ours["properties"][name]) == _prop_shape(p), name
 
 
+@needs_reference
 @pytest.mark.parametrize("which", sorted(_OURS))
 def test_defaults_match_reference(which):
     ref = _ref_schema(which)

@@ -17,7 +17,7 @@ from docling_core_spark.parse.spans import parse_span_doc
 from docling_core_spark.serialize.doctags import export_to_doctags
 from docling_core_spark.serialize.markdown import serialize_markdown
 
-from ref_oracle import ref_modules
+from ref_oracle import needs_reference, ref_modules
 
 DOC_IDS = list(SHAPE_IDS) + [f"doc-{i:08d}" for i in range(24)]
 
@@ -34,6 +34,7 @@ def _ref_reload(s: str, name: str):
         return None
 
 
+@needs_reference
 @pytest.mark.parametrize("doc_id", DOC_IDS)
 def test_doctags_roundtrip_matches_reference(doc_id):
     doc, _ = parse_span_doc(doc_id, gen_spans(doc_id))
@@ -46,6 +47,7 @@ def test_doctags_roundtrip_matches_reference(doc_id):
     assert serialize_markdown(mine).text == rdoc.export_to_markdown()
 
 
+@needs_reference
 def test_chart_parse_where_reference_crashes():
     """Our parser implements the evident intent for charts without page
     images (classification annotation attached, no crash)."""

@@ -11,7 +11,7 @@ from docling_core_spark.serialize.doctags import export_to_doctags
 from docling_core_spark.serialize.html import export_to_html
 from docling_core_spark.serialize.markdown import serialize_markdown
 
-from ref_oracle import install_reference, ref_modules
+from ref_oracle import install_reference, needs_reference, ref_modules
 
 
 def _build_pair():
@@ -64,16 +64,19 @@ def _body(html):
     return m.group(1).strip() if m else html
 
 
+@needs_reference
 def test_formatting_markdown_matches_reference():
     mine, ref = _build_pair()
     assert serialize_markdown(mine).text == ref.export_to_markdown()
 
 
+@needs_reference
 def test_formatting_doctags_matches_reference():
     mine, ref = _build_pair()
     assert export_to_doctags(mine) == ref.export_to_doctags()
 
 
+@needs_reference
 def test_formatting_html_matches_reference():
     mine, ref = _build_pair()
     assert _body(export_to_html(mine)) == _body(ref.export_to_html())

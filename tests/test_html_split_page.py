@@ -9,7 +9,7 @@ from docling_core_spark.fixtures import gen_spans
 from docling_core_spark.parse.spans import parse_span_doc
 from docling_core_spark.serialize.html import export_to_html, html_body
 
-from ref_oracle import build_ref_doc, install_reference
+from ref_oracle import build_ref_doc, install_reference, needs_reference
 
 _DATA_URI = (
     "data:image/png;base64,"
@@ -33,6 +33,7 @@ def _ref_split(rdoc):
     return html_body(ser.serialize().text)
 
 
+@needs_reference
 def test_split_page_parity_fuzz():
     for did in ["shape:minimal"] + [f"doc-{i:08d}" for i in range(16)]:
         spans = gen_spans(did)
@@ -42,6 +43,7 @@ def test_split_page_parity_fuzz():
         assert mine == _ref_split(rdoc), did
 
 
+@needs_reference
 def test_split_page_with_page_images():
     """Pages carrying data: URI images render the <img> shortcut row."""
     install_reference()
@@ -65,6 +67,7 @@ def test_split_page_with_page_images():
     assert f'<img src="{_DATA_URI}">' in mine
 
 
+@needs_reference
 def test_single_column_unchanged():
     did = "doc-00000002"
     doc, _ = parse_span_doc(did, gen_spans(did))

@@ -15,7 +15,7 @@ from docling_core_spark.serialize.common import SerParams
 from docling_core_spark.serialize.html import export_to_html, html_body
 from docling_core_spark.serialize.markdown import serialize_markdown
 
-from ref_oracle import build_ref_doc, install_reference
+from ref_oracle import build_ref_doc, install_reference, needs_reference
 
 _DATA_URI = (
     "data:image/png;base64,"
@@ -56,6 +56,7 @@ def docs():
 MODES = ["placeholder", "embedded", "referenced"]
 
 
+@needs_reference
 @pytest.mark.parametrize("mode", MODES)
 def test_markdown_image_mode(docs, mode):
     install_reference()
@@ -67,6 +68,7 @@ def test_markdown_image_mode(docs, mode):
     assert mine == ref, mode
 
 
+@needs_reference
 @pytest.mark.parametrize("mode", MODES)
 def test_html_image_mode(docs, mode):
     install_reference()
@@ -78,6 +80,7 @@ def test_html_image_mode(docs, mode):
     assert mine == ref, mode
 
 
+@needs_reference
 def test_fuzz_corpus_image_modes():
     """Image modes over the deterministic fuzz corpus (pictures with
     img:// refs and charts): full-doc parity in every mode."""

@@ -19,7 +19,7 @@ from docling_core_spark.model.json_io import (
 from docling_core_spark.serialize.doctags import export_to_doctags
 from docling_core_spark.serialize.markdown import serialize_markdown
 
-from ref_oracle import ref_modules
+from ref_oracle import REFERENCE_PATH, needs_path, ref_modules
 
 FILES = [
     f
@@ -76,12 +76,14 @@ def test_version_gate_rejects_incompatible():
                              "version": "1.99.0"})
 
 
+V1_0_0_DOC = f"{REFERENCE_PATH}/test/data/doc/2206.01062-1.0.0.json"
+
+
+@needs_path(V1_0_0_DOC)
 def test_v1_0_0_upgrade_moves_headers_to_furniture():
     """v1.0.0 documents carry page_header/footer in the body; loading
     must move them to the furniture layer (document.py:1650-1664)."""
-    obj = json.load(
-        open("/root/reference/test/data/doc/2206.01062-1.0.0.json")
-    )
+    obj = json.load(open(V1_0_0_DOC))
     assert obj["version"] == "1.0.0"
     doc = from_reference_json(obj)
     moved = [

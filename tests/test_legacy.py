@@ -12,9 +12,10 @@ from docling_core_spark.parse.legacy import legacy_to_doc
 from docling_core_spark.serialize.doctags import export_to_doctags
 from docling_core_spark.serialize.markdown import serialize_markdown
 
-from ref_oracle import install_reference
+from ref_oracle import REFERENCE_PATH, install_reference, needs_path
 
-FILES = sorted(glob.glob("/root/reference/test/data/legacy_doc/doc-*.json"))
+LEGACY_DIR = f"{REFERENCE_PATH}/test/data/legacy_doc"
+FILES = sorted(glob.glob(f"{LEGACY_DIR}/doc-*.json"))
 
 
 def _ref_convert(path):
@@ -46,6 +47,7 @@ def test_legacy_reader_matches_reference(path):
     assert export_to_doctags(mydoc) == rdt
 
 
+@needs_path(LEGACY_DIR)
 def test_legacy_origin_binary_hash():
     obj = json.load(open(FILES[0]))
     doc = legacy_to_doc(obj)

@@ -15,7 +15,7 @@ from docling_core_spark.parse.legacy import legacy_to_doc
 from docling_core_spark.parse.spans import parse_span_doc
 from docling_core_spark.serialize.legacy import doc_to_legacy
 
-from ref_oracle import build_ref_doc, install_reference
+from ref_oracle import build_ref_doc, install_reference, needs_reference
 
 FILES = sorted(glob.glob("/root/reference/test/data/legacy_doc/doc-*.json"))
 
@@ -65,6 +65,7 @@ def _strip_hashes(obj):
     return obj
 
 
+@needs_reference
 def test_span_docs_match_reference():
     from docling_core_spark.fixtures import gen_spans
 

@@ -6,7 +6,7 @@ import random
 from docling_core_spark.fixtures import _random_otsl
 from docling_core_spark.model import table as T
 
-from ref_oracle import ref_parse_otsl
+from ref_oracle import needs_reference, ref_parse_otsl
 
 
 def _cells_key(cells):
@@ -22,6 +22,7 @@ def _cells_key(cells):
     )
 
 
+@needs_reference
 def test_otsl_parse_matches_reference():
     rng = random.Random(1234)
     for _ in range(25):
@@ -43,6 +44,7 @@ def test_otsl_parse_matches_reference():
         assert _cells_key(mine["table_cells"]) == _cells_key(ref_cells)
 
 
+@needs_reference
 def test_otsl_export_roundtrips_through_reference():
     """my export -> reference parse -> my export is a fixpoint."""
     rng = random.Random(99)

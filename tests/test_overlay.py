@@ -16,7 +16,7 @@ from docling_core_spark.ops.overlay import (
     gen_layout_doctags,
     overlay_svg_sql,
 )
-from ref_oracle import install_reference
+from ref_oracle import install_reference, needs_reference
 
 install_reference()
 
@@ -55,12 +55,14 @@ def _ref_flatten(did: str):
     return rows
 
 
+@needs_reference
 @pytest.mark.parametrize("i", [0, 1, 7, 23, 99])
 def test_flatten_matches_reference(i):
     did = f"lay-{i:08d}"
     assert flatten_doc_id(did) == _ref_flatten(did)
 
 
+@needs_reference
 def test_label_colors_match_reference():
     """LABEL_COLORS must be the reference color map (labels.py:45-69)
     for every label the corpus generator can emit."""
@@ -107,6 +109,7 @@ def test_arrow_chain_resets_per_page(spark):
         assert r["n_arrows"] == r["n_items"] - 1
 
 
+@needs_reference
 @pytest.mark.parametrize("i", [0, 3, 11, 42])
 def test_table_cells_flatten_matches_reference(i):
     import sys

@@ -6,7 +6,7 @@ import pytest
 
 import docling_core_spark.pages as P
 
-from ref_oracle import install_reference
+from ref_oracle import install_reference, needs_reference
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -85,6 +85,7 @@ def pages():
     return by_page
 
 
+@needs_reference
 def test_cells_in_bbox_matches_reference(pages):
     install_reference()
     from docling_core.types.doc.base import BoundingBox, CoordOrigin
@@ -112,6 +113,7 @@ def test_cells_in_bbox_matches_reference(pages):
         assert got_by_page.get(page_id, set()) == want, page_id
 
 
+@needs_reference
 def test_crop_text_matches_reference(pages):
     install_reference()
     from docling_core.types.doc.base import BoundingBox, CoordOrigin
@@ -128,6 +130,7 @@ def test_crop_text_matches_reference(pages):
         assert got.get(page_id, "") == want, page_id
 
 
+@needs_reference
 def test_textlines_match_reference(pages):
     install_reference()
     from docling_core.types.doc.page import TextCellUnit
@@ -171,6 +174,7 @@ def test_render_svg_duck_matches_python_mirror(pages):
         assert got[page_id] == P.render_page_svg(cells), page_id
 
 
+@needs_reference
 def test_render_svg_geometry_matches_reference(pages):
     """Every polygon in the SVG carries exactly the coordinates the
     reference's _render_cells_bbox would draw: rect.to_top_left_origin(

@@ -20,7 +20,7 @@ from docling_core_spark.serialize.markdown import (
 )
 from docling_core_spark.serialize.spanseq import doc_span_seq
 
-from ref_oracle import build_ref_doc, ref_span_seq
+from ref_oracle import build_ref_doc, needs_reference, ref_span_seq
 
 
 def _stub_latex2mathml():
@@ -52,6 +52,7 @@ def corpus():
     return out
 
 
+@needs_reference
 def test_span_sequence_invariant(corpus):
     """(kind, text, media_ref, order) equality — the BASELINE.json gate."""
     for did, (_, doc, rdoc) in corpus.items():
@@ -60,11 +61,13 @@ def test_span_sequence_invariant(corpus):
         assert mine == ref, f"span seq mismatch for {did}"
 
 
+@needs_reference
 def test_markdown_export(corpus):
     for did, (_, doc, rdoc) in corpus.items():
         assert export_to_markdown(doc) == rdoc.export_to_markdown(), did
 
 
+@needs_reference
 def test_markdown_paged(corpus):
     for did, (_, doc, rdoc) in corpus.items():
         mine = serialize_markdown(
@@ -76,17 +79,20 @@ def test_markdown_paged(corpus):
         assert mine == ref, did
 
 
+@needs_reference
 def test_doctags_export(corpus):
     for did, (_, doc, rdoc) in corpus.items():
         assert export_to_doctags(doc) == rdoc.export_to_doctags(), did
 
 
+@needs_reference
 def test_doctags_minified(corpus):
     for did, (_, doc, rdoc) in corpus.items():
         mine = export_to_doctags(doc, minified=True)
         assert mine == rdoc.export_to_doctags(minified=True), did
 
 
+@needs_reference
 def test_html_export_body(corpus):
     for did, (_, doc, rdoc) in corpus.items():
         mine = html_body(export_to_html(doc))
@@ -94,6 +100,7 @@ def test_html_export_body(corpus):
         assert mine == ref, did
 
 
+@needs_reference
 def test_element_tree_export(corpus):
     for did, (_, doc, rdoc) in corpus.items():
         assert (
@@ -101,6 +108,7 @@ def test_element_tree_export(corpus):
         ), did
 
 
+@needs_reference
 def test_markdown_label_filter(corpus):
     """Exclusion sets (WHERE semantics): label allowlist filter parity."""
     from docling_core_spark.model import labels as L
@@ -121,6 +129,7 @@ def test_markdown_label_filter(corpus):
         assert mine == ref, did
 
 
+@needs_reference
 def test_markdown_slice(corpus):
     """start/stop slice semantics parity (from_element/to_element)."""
     for did in ["doc-00000003", "doc-00000004"]:
@@ -130,6 +139,7 @@ def test_markdown_slice(corpus):
         assert mine == ref, did
 
 
+@needs_reference
 def test_markdown_page_filter(corpus):
     """page_no filter parity."""
     for did in ["doc-00000005", "doc-00000006"]:

@@ -19,7 +19,7 @@ from docling_core_spark.serialize.doctags import export_to_doctags
 from docling_core_spark.serialize.markdown import export_to_markdown
 from docling_core_spark.serialize.spanseq import doc_span_seq
 
-from ref_oracle import build_ref_doc, ref_span_seq
+from ref_oracle import build_ref_doc, needs_reference, ref_span_seq
 
 # markdown-hostile alphabet: escaping, HTML entities, pipes, headers
 _TEXT = st.text(
@@ -85,6 +85,7 @@ def span_stream(draw):
     return spans
 
 
+@needs_reference
 @settings(
     max_examples=150,
     deadline=None,

@@ -13,7 +13,7 @@ from docling_core_spark.sources.resolve import (
     spark_source_path,
 )
 
-from ref_oracle import install_reference
+from ref_oracle import install_reference, needs_reference
 
 HEADER_CASES = [
     {},
@@ -32,6 +32,7 @@ URL_CASES = [
 ]
 
 
+@needs_reference
 @pytest.mark.parametrize("headers", HEADER_CASES)
 @pytest.mark.parametrize("url", URL_CASES)
 def test_remote_filename_matches_reference(url, headers):

@@ -14,7 +14,7 @@ from docling_core_spark.model.schema_validate import (
     validate_schema,
 )
 
-from ref_oracle import install_reference
+from ref_oracle import install_reference, needs_path, needs_reference
 
 SCHEMA_DIR = "/root/reference/docling_core/resources/schemas/doc"
 FILES = sorted(
@@ -27,6 +27,8 @@ def _schema(name: str) -> dict:
     return json.load(open(f"{SCHEMA_DIR}/{name}"))
 
 
+@needs_reference
+@needs_path(f"{SCHEMA_DIR}/DOC.json")
 def test_matches_reference_validator():
     install_reference()
     from docling_core.utils.validators import validate_schema as ref_validate
@@ -42,6 +44,7 @@ def test_matches_reference_validator():
     assert n_invalid > 0, "error fixtures must produce failures"
 
 
+@needs_path(f"{SCHEMA_DIR}/DOC.json")
 def test_distributed_validator(spark):
     schema = _schema("DOC.json")
     rows = [

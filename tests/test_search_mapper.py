@@ -13,7 +13,7 @@ from docling_core_spark.search.mapper import (
     replace_refs,
 )
 
-from ref_oracle import install_reference
+from ref_oracle import install_reference, needs_path, needs_reference
 
 GOLDEN_DIR = "/root/reference/test/data/json_schemas"
 
@@ -56,6 +56,8 @@ REC_EXTRA = {
 }
 
 
+@needs_reference
+@needs_path(f"{GOLDEN_DIR}/document-ref.json")
 def test_document_schema_matches_reference_golden():
     install_reference()
     from docling_core.types.legacy_doc.document import ExportedCCSDocument
@@ -67,6 +69,8 @@ def test_document_schema_matches_reference_golden():
     assert mine == ref
 
 
+@needs_reference
+@needs_path(f"{GOLDEN_DIR}/dbrecord-ref.json")
 def test_record_schema_matches_reference_golden():
     install_reference()
     from docling_core.types.rec.record import Record

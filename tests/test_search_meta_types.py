@@ -23,7 +23,12 @@ from docling_core_spark.search.meta_schema import (
     validate_meta,
     validate_package,
 )
-from ref_oracle import install_reference
+from ref_oracle import (
+    REFERENCE_PATH,
+    install_reference,
+    needs_path,
+    needs_reference,
+)
 
 install_reference()
 
@@ -31,6 +36,7 @@ TAXONOMY = ["Public", "PI"]
 DOMAIN = ["Science", "Technology", "History", "Art", "Literature",
           "Geography"]
 FIXTURES = sorted(glob.glob("/root/reference/test/data/search/*.json"))
+META_01 = f"{REFERENCE_PATH}/test/data/search/meta-01.json"
 
 
 def _ref_meta():
@@ -76,6 +82,7 @@ def test_fixture_verdict_parity(fn):
         assert eng_locs == ref_locs, f"{fn}: {eng_locs} != {ref_locs}"
 
 
+@needs_reference
 def test_schema_structural_parity():
     """Same property set, required set, closed-world flag and version
     constraints as the reference's model_json_schema()."""
@@ -99,6 +106,7 @@ def test_schema_structural_parity():
         ), d
 
 
+@needs_reference
 def test_package_schema_parity():
     from docling_core.search.package import Package
 
@@ -115,10 +123,7 @@ def test_package_schema_parity():
 
 
 def _base():
-    return json.loads(
-        open("/root/reference/test/data/search/meta-01.json",
-             encoding="utf-8").read()
-    )
+    return json.loads(open(META_01, encoding="utf-8").read())
 
 
 def _mutations():
@@ -159,6 +164,8 @@ def _mutations():
     ]
 
 
+@needs_reference
+@needs_path(META_01)
 @pytest.mark.parametrize(
     "mut,label", _mutations(), ids=[m[1] for m in _mutations()]
 )
@@ -172,6 +179,8 @@ def test_mutation_verdict_parity(mut, label):
     assert eng_ok == ref_ok, f"{label}: eng={eng_ok} ({msg})"
 
 
+@needs_reference
+@needs_path(META_01)
 def test_multi_extra_error_field_parity():
     """Several extra keys + a missing field in one payload: the engine's
     error-field sequence must match Pydantic's (extras first in payload
@@ -186,6 +195,8 @@ def test_multi_extra_error_field_parity():
     assert meta_error_fields(payload, TAXONOMY, DOMAIN) == ref_locs
 
 
+@needs_reference
+@needs_path(META_01)
 def test_valid_base_accepted():
     payload = json.dumps(_base())
     assert _ref_verdict(payload)[0]
@@ -209,6 +220,7 @@ def test_document_ref_falsy_accepted():
         assert ok is expect, f"$ref={ref!r}: {msg}"
 
 
+@needs_path(META_01)
 def test_distributed_validation(spark):
     from docling_core_spark.search.meta_schema import validate_meta_docs
 

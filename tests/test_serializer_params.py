@@ -11,7 +11,7 @@ from docling_core_spark.parse.spans import parse_span_doc
 from docling_core_spark.serialize.common import SerParams
 from docling_core_spark.serialize.markdown import serialize_markdown
 
-from ref_oracle import build_ref_doc
+from ref_oracle import build_ref_doc, needs_reference
 
 DOC_IDS = ["doc-00000003", "doc-00000007", "doc-00000011"]
 
@@ -70,6 +70,7 @@ MATRIX = [
 ]
 
 
+@needs_reference
 @pytest.mark.parametrize("doc_id", DOC_IDS)
 @pytest.mark.parametrize("name,my_kw,ref_kw", MATRIX, ids=[m[0] for m in MATRIX])
 def test_markdown_params_match_reference(doc_id, name, my_kw, ref_kw):
@@ -93,6 +94,7 @@ def test_markdown_params_match_reference(doc_id, name, my_kw, ref_kw):
     assert mine == ref, name
 
 
+@needs_reference
 @pytest.mark.parametrize("doc_id", DOC_IDS + [f"doc-{i:08d}" for i in range(6)])
 def test_export_to_text_matches_reference(doc_id):
     from docling_core_spark.serialize.markdown import export_to_text

@@ -12,7 +12,7 @@ from docling_core_spark.model.doc import (
 )
 from docling_core_spark.parse.spans import parse_span_doc
 
-from ref_oracle import build_ref_doc, install_reference
+from ref_oracle import build_ref_doc, install_reference, needs_reference
 
 DOC_IDS = list(SHAPE_IDS) + [f"doc-{i:08d}" for i in range(20)]
 
@@ -32,6 +32,7 @@ def _ref_pairs(rdoc, **kw):
     return out
 
 
+@needs_reference
 @pytest.mark.parametrize(
     "kw",
     [
@@ -56,6 +57,7 @@ def test_stack_iteration_matches_reference(kw):
         assert mine == ref, (did, kw)
 
 
+@needs_reference
 def test_get_stack_matches_reference():
     install_reference()
     from docling_core.types.doc.document import RefItem

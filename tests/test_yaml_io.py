@@ -15,11 +15,12 @@ from docling_core_spark.fixtures import gen_spans
 from docling_core_spark.parse.spans import parse_span_doc
 from docling_core_spark.serialize.markdown import serialize_markdown
 
-from ref_oracle import build_ref_doc, install_reference
+from ref_oracle import build_ref_doc, install_reference, needs_reference
 
 YAML_FILES = sorted(glob.glob("/root/reference/test/data/doc/*.yaml"))
 
 
+@needs_reference
 def test_yaml_dump_matches_reference():
     """Our yaml text == yaml.dump of the reference's export_to_dict
     (what save_as_yaml writes, image_mode EMBEDDED being a no-op for
