@@ -19,6 +19,12 @@ max_chars_per_word — mirrors the published BERT reference semantics.
 
 Everything is pure-Python and import-light: executors load the vocab
 once per process (module-level cache), never per row.
+
+`count_tokens` memoizes per raw whitespace-separated word (a bounded
+dict on the tokenizer instance), which is exact: lowercasing (final
+sigma included), NFD and Mn-dropping never act across whitespace, so a
+text's token count is the sum of its words' counts. The hybrid
+chunker's growing windows re-count the same words many times over.
 """
 
 from __future__ import annotations
@@ -29,6 +35,8 @@ from typing import Dict, Iterable, List, Optional, Tuple
 UNK_TOKEN = "[UNK]"
 SPECIAL_TOKENS = ["[PAD]", "[UNK]", "[CLS]", "[SEP]", "[MASK]"]
 MAX_CHARS_PER_WORD = 100
+# distinct words a tokenizer's count memo holds before it is cleared
+COUNT_MEMO_WORDS = 65_536
 
 def _read_vocab_text() -> str:
     """importlib.resources, not open(__file__-relative): the package
@@ -87,6 +95,7 @@ class WordPieceTokenizer:
         self.vocab = {tok: i for i, tok in enumerate(vocab)}
         if UNK_TOKEN not in self.vocab:
             raise ValueError(f"vocab must contain {UNK_TOKEN}")
+        self._word_counts: Dict[str, int] = {}
 
     def wordpiece(self, word: str) -> List[str]:
         if len(word) > MAX_CHARS_PER_WORD:
@@ -117,7 +126,19 @@ class WordPieceTokenizer:
         return out
 
     def count_tokens(self, text: str) -> int:
-        return len(self.tokenize(text))
+        """len(self.tokenize(text)), summed per whitespace-split word
+        through the memo (see the module docstring for why it is exact);
+        a miss counts the word with `tokenize` itself."""
+        memo = self._word_counts
+        n = 0
+        for word in text.split():
+            c = memo.get(word)
+            if c is None:
+                if len(memo) >= COUNT_MEMO_WORDS:
+                    memo.clear()
+                c = memo[word] = len(self.tokenize(word))
+            n += c
+        return n
 
 
 _DEFAULT: Optional[WordPieceTokenizer] = None

@@ -12,21 +12,42 @@ row loops); each has a DuckDB oracle built from the SAME constants so the
 driver's correctness gate can verify values bit-for-bit.
 """
 
+from typing import Optional
+
 from pyspark.sql import DataFrame, SparkSession
+
+
+def sf_token(sf_dir: str) -> str:
+    """The scale token of an sf dir (`.../sf0.01` -> `0.01`)."""
+    return sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
 
 def artifact_path(sf_dir: str, prefix: str) -> str:
     """Committed per-sf artifact under goldens/ (`<prefix>_sf<sf>.json`)
-    — the ONE place that derives the scale token from an sf dir, shared
-    by the IVF centroid and PCA component loaders so the Spark query
-    and its DuckDB oracle can never resolve different artifacts."""
+    — the ONE place that maps an sf dir to its artifact, shared by the
+    IVF centroid, PQ codebook and PCA component loaders so the Spark
+    query and its DuckDB oracle can never resolve different artifacts."""
     import os
 
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     repo = os.path.dirname(os.path.dirname(os.path.dirname(
         os.path.abspath(__file__)
     )))
-    return os.path.join(repo, "goldens", f"{prefix}_sf{sf}.json")
+    return os.path.join(
+        repo, "goldens", f"{prefix}_sf{sf_token(sf_dir)}.json"
+    )
+
+
+def read_artifact(sf_dir: str, prefix: str) -> Optional[dict]:
+    """The parsed `artifact_path(sf_dir, prefix)`, or None when the sf
+    has no committed artifact."""
+    import json
+    import os
+
+    path = artifact_path(sf_dir, prefix)
+    if not os.path.exists(path):
+        return None
+    with open(path) as f:
+        return json.load(f)
 
 
 def read_spread(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:

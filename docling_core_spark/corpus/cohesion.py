@@ -457,21 +457,15 @@ def whiten_expr(components, eigvals_micro, top_k: int = 8) -> str:
 # Gate-verified PCA variance check: c^T Sigma c vs the committed eigenvalue
 # ---------------------------------------------------------------------------
 
-def _pca_path(sf_dir: str) -> str:
-    from . import artifact_path
-
-    return artifact_path(sf_dir, "pca")
-
-
 def _pca_artifact(sf_dir: str) -> dict:
-    import json
-    import os
+    from . import artifact_path, read_artifact
 
-    path = _pca_path(sf_dir)
-    if not os.path.exists(path):
-        raise FileNotFoundError(f"{path} missing — run tools/gen_pca.py")
-    with open(path) as f:
-        return json.load(f)
+    art = read_artifact(sf_dir, "pca")
+    if art is None:
+        raise FileNotFoundError(
+            f"{artifact_path(sf_dir, 'pca')} missing — run tools/gen_pca.py"
+        )
+    return art
 
 
 def q_emb_pca_var(spark: SparkSession, sf_dir: str) -> DataFrame:

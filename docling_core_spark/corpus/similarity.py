@@ -47,7 +47,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..artifacts import Memo
-from . import artifact_path, constants as C, read_spread
+from . import artifact_path, constants as C, read_artifact, read_spread
 
 # ---------------------------------------------------------------------------
 # expression fragments
@@ -545,21 +545,13 @@ def _nearest_cells(e: DataFrame, cents: DataFrame, n: int) -> DataFrame:
     )
 
 
-def _centroids_path(sf_dir: str) -> str:
-    return artifact_path(sf_dir, "ivf_centroids")
-
-
 def ivf_centroids(spark: SparkSession, sf_dir: str) -> list:
     """Centroids for the sf: the committed artifact when present
     (tools/gen_centroids.py — also what the DuckDB oracle embeds), else
     trained on the fly (memoized per session)."""
-    import json
-    import os
-
-    path = _centroids_path(sf_dir)
-    if os.path.exists(path):
-        with open(path) as f:
-            return json.load(f)["centroids"]
+    art = read_artifact(sf_dir, "ivf_centroids")
+    if art is not None:
+        return art["centroids"]
     return _MEMO.fetch(
         spark, sf_dir, "ivf_centroids",
         build=lambda: compute_ivf_centroids(spark, sf_dir))
@@ -628,16 +620,13 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _centroid_values_duck(sf_dir: str) -> str:
     """The committed k-means artifact as DuckDB literal rows — the
     oracle consumes the SAME broadcast table the Spark query does."""
-    import json
-    import os
-
-    path = _centroids_path(sf_dir)
-    if not os.path.exists(path):
+    art = read_artifact(sf_dir, "ivf_centroids")
+    if art is None:
         raise FileNotFoundError(
-            f"{path} missing — run tools/gen_centroids.py"
+            f"{artifact_path(sf_dir, 'ivf_centroids')} missing"
+            " — run tools/gen_centroids.py"
         )
-    with open(path) as f:
-        cents = json.load(f)["centroids"]
+    cents = art["centroids"]
     rows = ", ".join(
         f"({i}, [{', '.join(repr(float(x)) for x in c)}]::DOUBLE[])"
         for i, c in enumerate(cents)
@@ -1075,10 +1064,6 @@ PQ_KMEANS_ITERS = 3
 PQ_SEED_IDS = list(range(200, 200 + PQ_KS))
 
 
-def _pq_path(sf_dir: str) -> str:
-    return artifact_path(sf_dir, "pq_codebooks")
-
-
 def _pq_subvecs(e: DataFrame) -> DataFrame:
     """(vec_id, m, sub) — the per-subspace view of the embedding."""
     return e.select(
@@ -1173,13 +1158,9 @@ def compute_pq_codebooks(
 def pq_codebooks(spark: SparkSession, sf_dir: str) -> list:
     """Committed artifact if present (tools/gen_pq_codebooks.py — also
     what the DuckDB oracle embeds), else computed and memoized."""
-    import json
-    import os
-
-    path = _pq_path(sf_dir)
-    if os.path.exists(path):
-        with open(path) as f:
-            return json.load(f)["codebooks"]
+    art = read_artifact(sf_dir, "pq_codebooks")
+    if art is not None:
+        return art["codebooks"]
     return _MEMO.fetch(
         spark, sf_dir, "pq_codebooks",
         build=lambda: compute_pq_codebooks(spark, sf_dir))
@@ -1280,16 +1261,13 @@ def _pq_values_duck(sf_dir: str) -> str:
     """The committed PQ artifact as DuckDB literal rows (m, c_id,
     c_sub) — the oracle consumes the SAME codebook the Spark query
     broadcasts."""
-    import json
-    import os
-
-    path = _pq_path(sf_dir)
-    if not os.path.exists(path):
+    art = read_artifact(sf_dir, "pq_codebooks")
+    if art is None:
         raise FileNotFoundError(
-            f"{path} missing — run tools/gen_pq_codebooks.py"
+            f"{artifact_path(sf_dir, 'pq_codebooks')} missing"
+            " — run tools/gen_pq_codebooks.py"
         )
-    with open(path) as f:
-        books = json.load(f)["codebooks"]
+    books = art["codebooks"]
     rows = ", ".join(
         f"({m}, {c}, [{', '.join(repr(float(x)) for x in books[m][c])}]"
         f"::DOUBLE[])"

@@ -16,6 +16,7 @@ lacks (PIL, tabulate) are stubbed:
 
 from __future__ import annotations
 
+import glob
 import importlib.metadata as _md
 import os
 import sys
@@ -36,6 +37,19 @@ def needs_path(path):
 
 # every test that imports docling_core through install_reference()
 needs_reference = needs_path(REFERENCE_PATH)
+
+
+def ref_files(pattern, keep=lambda path: True):
+    """Sorted reference files matching `pattern` (and `keep`), to
+    parametrize over; when none match, one skipped case whose reason
+    names the pattern's directory, not pytest's "got empty parameter
+    set". Pair it with `ids=os.path.basename`."""
+    files = [f for f in sorted(glob.glob(pattern)) if keep(f)]
+    return files or [pytest.param(
+        None, id="missing", marks=pytest.mark.skip(
+            reason=f"reference missing: {os.path.dirname(pattern)}"),
+    )]
+
 
 _installed = False
 

@@ -14,10 +14,16 @@ them via jsonschema, and the search-index mapper consumes them.
 
 import glob
 import json
+import os
 
 import pytest
 
-from ref_oracle import install_reference, needs_reference
+from ref_oracle import (
+    REFERENCE_PATH,
+    install_reference,
+    needs_path,
+    needs_reference,
+)
 
 from docling_core_spark.model.schema_gen import (
     generate_generic_schema,
@@ -89,12 +95,15 @@ def test_defaults_match_reference(which):
 
 
 _DATA = {
-    "record": "/root/reference/test/data/rec/record-*.json",
-    "qa": "/root/reference/test/data/nlp/qa-*.json",
+    "record": f"{REFERENCE_PATH}/test/data/rec/record-*.json",
+    "qa": f"{REFERENCE_PATH}/test/data/nlp/qa-*.json",
 }
 
 
-@pytest.mark.parametrize("which", sorted(_DATA))
+@pytest.mark.parametrize("which", [
+    pytest.param(w, marks=needs_path(os.path.dirname(_DATA[w])))
+    for w in sorted(_DATA)
+])
 def test_reference_data_validates_against_generated_schema(which):
     """The reference's own valid data files are accepted by the
     engine-generated schema (jsonschema draft 2020-12)."""
@@ -102,8 +111,7 @@ def test_reference_data_validates_against_generated_schema(which):
 
     schema = _OURS[which]()
     files = sorted(glob.glob(_DATA[which]))
-    if not files:
-        pytest.skip(f"reference data missing: {_DATA[which]}")
+    assert files, _DATA[which]
     for fn in files:
         with open(fn) as f:
             jsonschema.validate(json.load(f), schema)

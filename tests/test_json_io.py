@@ -7,8 +7,8 @@ For every DoclingDocument JSON in the reference's own test corpus:
     validation (model_validate) with identical exports.
 """
 
-import glob
 import json
+import os
 
 import pytest
 
@@ -19,16 +19,19 @@ from docling_core_spark.model.json_io import (
 from docling_core_spark.serialize.doctags import export_to_doctags
 from docling_core_spark.serialize.markdown import serialize_markdown
 
-from ref_oracle import REFERENCE_PATH, needs_path, ref_modules
-
-FILES = [
-    f
-    for f in sorted(glob.glob("/root/reference/test/data/doc/*.json"))
-    if json.load(open(f)).get("schema_name") == "DoclingDocument"
-]
+from ref_oracle import REFERENCE_PATH, needs_path, ref_files, ref_modules
 
 
-@pytest.mark.parametrize("path", FILES, ids=[f.split("/")[-1] for f in FILES])
+def _is_docling_document(path):
+    with open(path) as f:
+        return json.load(f).get("schema_name") == "DoclingDocument"
+
+
+FILES = ref_files(f"{REFERENCE_PATH}/test/data/doc/*.json",
+                  keep=_is_docling_document)
+
+
+@pytest.mark.parametrize("path", FILES, ids=os.path.basename)
 def test_load_matches_reference_exports(path):
     R = ref_modules()
     rdoc = R.DoclingDocument.load_from_json(path)
@@ -37,7 +40,7 @@ def test_load_matches_reference_exports(path):
     assert export_to_doctags(mydoc) == rdoc.export_to_doctags()
 
 
-@pytest.mark.parametrize("path", FILES, ids=[f.split("/")[-1] for f in FILES])
+@pytest.mark.parametrize("path", FILES, ids=os.path.basename)
 def test_written_json_revalidates_in_reference(path):
     R = ref_modules()
     rdoc = R.DoclingDocument.load_from_json(path)
@@ -47,7 +50,7 @@ def test_written_json_revalidates_in_reference(path):
     assert rdoc2.export_to_doctags() == rdoc.export_to_doctags()
 
 
-@pytest.mark.parametrize("path", FILES, ids=[f.split("/")[-1] for f in FILES])
+@pytest.mark.parametrize("path", FILES, ids=os.path.basename)
 def test_html_body_matches_reference(path):
     """HTML parity on the <body> content (the head's stylesheet/brand
     string are presentation assets we deliberately did not copy).

@@ -3,8 +3,8 @@ reference's DsDocument.model_validate + legacy_to_docling_document chain
 on the reference's own legacy corpus — markdown AND doctags exports must
 match exactly."""
 
-import glob
 import json
+import os
 
 import pytest
 
@@ -12,10 +12,16 @@ from docling_core_spark.parse.legacy import legacy_to_doc
 from docling_core_spark.serialize.doctags import export_to_doctags
 from docling_core_spark.serialize.markdown import serialize_markdown
 
-from ref_oracle import REFERENCE_PATH, install_reference, needs_path
+from ref_oracle import (
+    REFERENCE_PATH,
+    install_reference,
+    needs_path,
+    ref_files,
+)
 
 LEGACY_DIR = f"{REFERENCE_PATH}/test/data/legacy_doc"
-FILES = sorted(glob.glob(f"{LEGACY_DIR}/doc-*.json"))
+FILES = ref_files(f"{LEGACY_DIR}/doc-*.json")
+FIRST = f"{LEGACY_DIR}/doc-1.json"
 
 
 def _ref_convert(path):
@@ -36,7 +42,7 @@ def _ref_convert(path):
         return None
 
 
-@pytest.mark.parametrize("path", FILES, ids=[f.split("/")[-1] for f in FILES])
+@pytest.mark.parametrize("path", FILES, ids=os.path.basename)
 def test_legacy_reader_matches_reference(path):
     ref = _ref_convert(path)
     if ref is None:
@@ -47,9 +53,9 @@ def test_legacy_reader_matches_reference(path):
     assert export_to_doctags(mydoc) == rdt
 
 
-@needs_path(LEGACY_DIR)
+@needs_path(FIRST)
 def test_legacy_origin_binary_hash():
-    obj = json.load(open(FILES[0]))
+    obj = json.load(open(FIRST))
     doc = legacy_to_doc(obj)
     assert doc["origin"]["mimetype"] == "application/pdf"
     assert isinstance(doc["origin"]["binary_hash"], int)

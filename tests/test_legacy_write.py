@@ -6,8 +6,8 @@ on span-built docs (hash fields normalized there: with no origin both
 writers hash a fresh uuid4, nondeterministically, by design)."""
 
 import copy
-import glob
 import json
+import os
 
 import pytest
 
@@ -15,9 +15,15 @@ from docling_core_spark.parse.legacy import legacy_to_doc
 from docling_core_spark.parse.spans import parse_span_doc
 from docling_core_spark.serialize.legacy import doc_to_legacy
 
-from ref_oracle import build_ref_doc, install_reference, needs_reference
+from ref_oracle import (
+    REFERENCE_PATH,
+    build_ref_doc,
+    install_reference,
+    needs_reference,
+    ref_files,
+)
 
-FILES = sorted(glob.glob("/root/reference/test/data/legacy_doc/doc-*.json"))
+FILES = ref_files(f"{REFERENCE_PATH}/test/data/legacy_doc/doc-*.json")
 
 
 def _ref_writer():
@@ -45,7 +51,7 @@ def _ref_reader(path):
         return None
 
 
-@pytest.mark.parametrize("path", FILES, ids=[f.split("/")[-1] for f in FILES])
+@pytest.mark.parametrize("path", FILES, ids=os.path.basename)
 def test_roundtrip_matches_reference(path):
     rdoc = _ref_reader(path)
     if rdoc is None:

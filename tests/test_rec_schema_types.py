@@ -15,37 +15,32 @@ import os
 
 import pytest
 
-from ref_oracle import REFERENCE_PATH, install_reference
+from ref_oracle import (
+    REFERENCE_PATH,
+    install_reference,
+    needs_path,
+    needs_reference,
+)
 
-REC_GLOBS = {
-    "predicate": "/root/reference/test/data/rec/*predicate-*.json",
-    "attribute": "/root/reference/test/data/rec/*attribute-*.json",
-    "record": "/root/reference/test/data/rec/*record-*.json",
-    "qa_pair": "/root/reference/test/data/nlp/*qa-*.json",
-}
 # the reference checkout's test data dir, which every glob lives under
-_REF_DATA = os.path.commonpath(list(REC_GLOBS.values()))
-_MISSING = f"reference data missing: {_REF_DATA}"
+_REF_DATA = f"{REFERENCE_PATH}/test/data"
+REC_GLOBS = {
+    "predicate": f"{_REF_DATA}/rec/*predicate-*.json",
+    "attribute": f"{_REF_DATA}/rec/*attribute-*.json",
+    "record": f"{_REF_DATA}/rec/*record-*.json",
+    "qa_pair": f"{_REF_DATA}/nlp/*qa-*.json",
+}
+_MISSING = f"reference missing: {_REF_DATA}"
 
 
-@pytest.fixture
-def ref_json():
-    """Loader of a reference data file (path relative to the data dir);
-    skips, naming the file, when it is absent."""
-
-    def load(rel: str):
-        path = os.path.join(_REF_DATA, rel)
-        if not os.path.exists(path):
-            pytest.skip(f"reference data missing: {path}")
-        with open(path) as fh:
-            return json.load(fh)
-
-    return load
+def _ref_json(rel: str):
+    """A reference data file, by path relative to the data dir; tests
+    gate on it with `needs_path(os.path.join(_REF_DATA, rel))`."""
+    with open(os.path.join(_REF_DATA, rel)) as fh:
+        return json.load(fh)
 
 
 def _ref_models():
-    if not os.path.isdir(REFERENCE_PATH):
-        pytest.skip(f"reference checkout missing: {REFERENCE_PATH}")
     install_reference()
     from docling_core.types.gen.generic import Generic
     from docling_core.types.nlp.qa import QAPair
@@ -98,6 +93,7 @@ def test_fixture_verdict_parity(kind, fn):
     assert ref_ok == ("error-" not in fn)
 
 
+@needs_reference
 def test_generic_inline_parity():
     """The reference's test_collection.py Generic cases."""
     from docling_core_spark.model.rec_schema import validate_typed
@@ -124,7 +120,8 @@ def test_generic_inline_parity():
 
 
 def _mutations():
-    """(kind, base-fixture, mutate-fn, label): each mutation targets one
+    """(kind, base-fixture, mutate-fn, label) cases, each gated on its
+    base fixture (relative to the data dir): each mutation targets one
     declared constraint; the test asserts BOTH engines reject it."""
     def drop(key):
         def f(o):
@@ -139,41 +136,42 @@ def _mutations():
             cur[path[-1]] = value
         return f
 
-    return [
-        ("predicate", "predicate-01.json",
+    cases = [
+        ("predicate", "rec/predicate-01.json",
          setv(["key", "name"], 7), "key.name non-string"),
-        ("predicate", "predicate-01.json",
+        ("predicate", "rec/predicate-01.json",
          drop("value"), "missing value"),
-        ("predicate", "predicate-01.json",
+        ("predicate", "rec/predicate-01.json",
          setv(["geopoint_value", "value"], [0.0]), "1-elem coordinates"),
-        ("attribute", "attribute-01.json",
+        ("attribute", "rec/attribute-01.json",
          setv(["conf"], -0.2), "conf below 0"),
-        ("attribute", "attribute-01.json",
+        ("attribute", "rec/attribute-01.json",
          setv(["predicates"], "notalist"), "predicates non-array"),
-        ("record", "record-01.json",
+        ("record", "rec/record-01.json",
          drop("subject"), "missing subject"),
-        ("record", "record-01.json",
+        ("record", "rec/record-01.json",
          setv(["description", "logs"], []), "empty logs ok both"),
-        ("record", "record-01.json",
+        ("record", "rec/record-01.json",
          setv(["file-info", "document-hash"], None), "null doc hash"),
-        ("qa_pair", "qa-1.json",
+        ("qa_pair", "nlp/qa-1.json",
          setv(["created"], "not-a-date"), "bad datetime"),
-        ("qa_pair", "qa-1.json",
+        ("qa_pair", "nlp/qa-1.json",
          setv(["retrieved_context"], "yes"), "non-bool flag"),
-        ("qa_pair", "qa-1.json",
+        ("qa_pair", "nlp/qa-1.json",
          drop("paths"), "missing paths"),
+    ]
+    return [
+        pytest.param(kind, base, mut, label, id=label.replace(" ", "-"),
+                     marks=needs_path(os.path.join(_REF_DATA, base)))
+        for kind, base, mut, label in cases
     ]
 
 
-@pytest.mark.parametrize(
-    "kind,base,mut,label", _mutations(),
-    ids=[m[3].replace(" ", "-") for m in _mutations()],
-)
-def test_mutation_verdict_parity(kind, base, mut, label, ref_json):
+@pytest.mark.parametrize("kind,base,mut,label", _mutations())
+def test_mutation_verdict_parity(kind, base, mut, label):
     from docling_core_spark.model.rec_schema import validate_typed
 
-    sub = "nlp" if kind == "qa_pair" else "rec"
-    obj = ref_json(f"{sub}/{base}")
+    obj = _ref_json(base)
     mutated = copy.deepcopy(obj)
     mut(mutated)
     payload = json.dumps(mutated)
@@ -182,12 +180,13 @@ def test_mutation_verdict_parity(kind, base, mut, label, ref_json):
     assert eng_ok == ref_ok, f"{label}: ref={ref_ok} eng={eng_ok} ({msg})"
 
 
-def test_identifier_name_rule_parity(ref_json):
+@needs_path(os.path.join(_REF_DATA, "rec/record-01.json"))
+def test_identifier_name_rule_parity():
     """The one cross-field rule (types/base.py:131-144): _name must be
     lower(type)#lower(value). Mutate a valid record's subject name."""
     from docling_core_spark.model.rec_schema import validate_typed
 
-    obj = ref_json("rec/record-01.json")
+    obj = _ref_json("rec/record-01.json")
     obj["subject"]["names"][0]["_name"] = "wrong#name"
     payload = json.dumps(obj)
     assert _ref_verdict("record", payload) is False
@@ -196,6 +195,7 @@ def test_identifier_name_rule_parity(ref_json):
     assert "_name field must be the concatenation" in msg
 
 
+@needs_path(_REF_DATA)
 def test_distributed_matches_local(spark):
     """validate_typed_docs (one Arrow stage) returns exactly the local
     verdicts over every fixture, failures as data."""
@@ -204,8 +204,6 @@ def test_distributed_matches_local(spark):
         validate_typed_docs,
     )
 
-    if not os.path.isdir(_REF_DATA):
-        pytest.skip(_MISSING)
     for kind, pat in REC_GLOBS.items():
         rows = []
         expected = {}

@@ -9,7 +9,6 @@ mutations asserted against BOTH engines — the same pattern as
 test_rec_schema_types.py."""
 
 import copy
-import glob
 import json
 import os
 
@@ -28,6 +27,7 @@ from ref_oracle import (
     install_reference,
     needs_path,
     needs_reference,
+    ref_files,
 )
 
 install_reference()
@@ -35,7 +35,7 @@ install_reference()
 TAXONOMY = ["Public", "PI"]
 DOMAIN = ["Science", "Technology", "History", "Art", "Literature",
           "Geography"]
-FIXTURES = sorted(glob.glob("/root/reference/test/data/search/*.json"))
+FIXTURES = ref_files(f"{REFERENCE_PATH}/test/data/search/*.json")
 META_01 = f"{REFERENCE_PATH}/test/data/search/meta-01.json"
 
 
@@ -67,9 +67,7 @@ def _ref_verdict(payload: str):
         return False, locs
 
 
-@pytest.mark.parametrize(
-    "fn", FIXTURES, ids=[os.path.basename(f) for f in FIXTURES]
-)
+@pytest.mark.parametrize("fn", FIXTURES, ids=os.path.basename)
 def test_fixture_verdict_parity(fn):
     payload = open(fn, encoding="utf-8").read()
     ref_ok, ref_locs = _ref_verdict(payload)

@@ -1,12 +1,15 @@
 """Vendored WordPiece tokenizer: BERT wordpiece semantics (greedy
 longest-match-first, ## continuations, [UNK], max word length), trainer
-determinism, and coverage of the fixture corpus the vocab was trained on.
+determinism, coverage of the fixture corpus the vocab was trained on,
+and exactness of the per-word count memo.
 """
 
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
+from docling_core_spark.chunk import hybrid_chunk_doc, wordpiece as wp
+from docling_core_spark.chunk.hybrid import HybridChunkerConfig
 from docling_core_spark.chunk.wordpiece import (
     MAX_CHARS_PER_WORD,
     UNK_TOKEN,
@@ -17,6 +20,7 @@ from docling_core_spark.chunk.wordpiece import (
     wordpiece_count_tokens,
 )
 from docling_core_spark.fixtures import SHAPE_IDS, gen_spans
+from docling_core_spark.parse.spans import parse_span_doc
 
 
 def test_basic_tokenize_bert_semantics():
@@ -91,3 +95,68 @@ def test_tokenize_total_function(text):
     assert wordpiece_count_tokens(text) == len(pieces)
     for p in pieces:
         assert p == UNK_TOKEN or p in tok.vocab
+
+
+# Characters where a per-word count could drift from the whole-text one:
+# Python-only and Unicode whitespace, final/capital sigma, dotted I
+# (lowercases to i + combining dot), a bare combining mark, CJK, ASCII
+# and Unicode punctuation.
+_MEMO_ALPHABET = list(
+    " \t\n\x1c\x85\u00a0\u2000\u3000ΣσςİI\u0301\u0327"
+    "中文字、。!?,.-()«»—…aAbBeé0"
+) + [" \u0301", "Σ ", "a" * (MAX_CHARS_PER_WORD + 1)]
+# a fullwidth word: one [UNK], though its NFKC form is several pieces
+_FULLWIDTH = "".join(chr(ord(c) + 0xFEE0) for c in "characteristically")
+
+
+def _fresh_tokenizer() -> WordPieceTokenizer:
+    return WordPieceTokenizer(load_default().vocab)
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(st.sampled_from(_MEMO_ALPHABET) | st.text(max_size=3),
+                max_size=40).map("".join))
+@example(f"{_FULLWIDTH} characteristically")
+def test_count_memo_matches_tokenize(text):
+    """The memoized count equals the uncached tokenization, from an empty
+    memo and from one already holding the same words; the memo is keyed
+    on the raw word, never on a normalized form."""
+    tok = _fresh_tokenizer()
+    expected = len(tok.tokenize(text))
+    assert tok.count_tokens(text) == expected
+    assert tok.count_tokens(text) == expected
+    assert load_default().count_tokens(text) == expected
+
+
+def test_count_memo_eviction(monkeypatch):
+    monkeypatch.setattr(wp, "COUNT_MEMO_WORDS", 4)
+    tok = _fresh_tokenizer()
+    words = ["the", "characteristically", "Σίσυφος", "a,b", "中文",
+             "zzq", "the", "x" * (MAX_CHARS_PER_WORD + 1)]
+    for i in range(len(words)):
+        text = " ".join(words[: i + 1])
+        assert tok.count_tokens(text) == len(tok.tokenize(text))
+        assert len(tok._word_counts) <= 4
+    # the memo belongs to its tokenizer: another vocab counts afresh
+    assert tok.count_tokens("characteristically") > 1
+    assert WordPieceTokenizer([UNK_TOKEN]).count_tokens(
+        "characteristically") == 1
+
+
+def test_count_memo_exact_on_hybrid_windows():
+    """Every window the hybrid chunker counts over the fixture corpus has
+    the uncached token count."""
+    tok = load_default()
+    seen = []
+
+    def counting(text):
+        n = wordpiece_count_tokens(text)
+        seen.append((text, n))
+        return n
+
+    cfg = HybridChunkerConfig(max_tokens=64, count_tokens=counting)
+    for did in list(SHAPE_IDS) + [f"doc-{i:08d}" for i in range(20)]:
+        doc, _ = parse_span_doc(did, gen_spans(did))
+        hybrid_chunk_doc(doc, cfg)
+    assert len(seen) > 100
+    assert all(n == len(tok.tokenize(text)) for text, n in seen)

@@ -2,7 +2,7 @@
 text byte-matches the reference's save_as_yaml, and the reference's own
 YAML corpus loads through our reader with identical exports."""
 
-import glob
+import os
 
 import pytest
 import yaml
@@ -15,9 +15,15 @@ from docling_core_spark.fixtures import gen_spans
 from docling_core_spark.parse.spans import parse_span_doc
 from docling_core_spark.serialize.markdown import serialize_markdown
 
-from ref_oracle import build_ref_doc, install_reference, needs_reference
+from ref_oracle import (
+    REFERENCE_PATH,
+    build_ref_doc,
+    install_reference,
+    needs_reference,
+    ref_files,
+)
 
-YAML_FILES = sorted(glob.glob("/root/reference/test/data/doc/*.yaml"))
+YAML_FILES = ref_files(f"{REFERENCE_PATH}/test/data/doc/*.yaml")
 
 
 @needs_reference
@@ -40,9 +46,7 @@ def test_yaml_roundtrip_own_docs():
         assert serialize_markdown(doc2).text == serialize_markdown(doc).text
 
 
-@pytest.mark.parametrize(
-    "path", YAML_FILES, ids=[f.split("/")[-1] for f in YAML_FILES]
-)
+@pytest.mark.parametrize("path", YAML_FILES, ids=os.path.basename)
 def test_reference_yaml_corpus_loads(path):
     """The reference's own YAML fixtures load through our reader with
     markdown output equal to the reference's loader."""

@@ -3,6 +3,8 @@ Spark and its oracle_sql() on DuckDB over the same sf dir; compare row
 count, sorted column names, and order-insensitive value multiset.
 
 Usage: check_correctness.py [SF_DIR] [NAME,NAME,...]
+Golden- and artifact-backed oracles embed SF_DIR's sf unless
+DOCLING_SPARK_GATE_SF names another.
 Exits 1 unless every query run prints MATCH or rows-only."""
 import os
 import sys
@@ -44,6 +46,9 @@ def normalize(rows, cols):
 
 def main(sf_dir="/root/testdata/sf0.01", only=None):
     import __spark_entry__ as E
+    from docling_core_spark.corpus import sf_token
+
+    os.environ.setdefault("DOCLING_SPARK_GATE_SF", sf_token(sf_dir))
 
     spark = (
         SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]")

@@ -22,7 +22,7 @@ TESTDATA = "/root/testdata"
 def main(sfs) -> None:
     from pyspark.sql import SparkSession
 
-    from docling_core_spark.corpus import similarity as CS
+    from docling_core_spark.corpus import artifact_path, similarity as CS
 
     spark = (
         SparkSession.builder.master("local[8]")
@@ -36,7 +36,7 @@ def main(sfs) -> None:
         sf_dir = f"{TESTDATA}/{sf}"
         t0 = time.time()
         cents = CS.compute_ivf_centroids(spark, sf_dir)
-        out = CS._centroids_path(sf_dir)
+        out = artifact_path(sf_dir, "ivf_centroids")
         with open(out, "w") as f:
             json.dump(
                 {

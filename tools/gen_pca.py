@@ -31,7 +31,7 @@ def main(sfs) -> None:
     import numpy as np
     from pyspark.sql import SparkSession
 
-    from docling_core_spark.corpus import cohesion as CO
+    from docling_core_spark.corpus import artifact_path, cohesion as CO
 
     spark = (
         SparkSession.builder.master("local[8]")
@@ -55,7 +55,7 @@ def main(sfs) -> None:
             canon.append(
                 [int(np.floor(v * 1000 + 0.5)) for v in c.tolist()]
             )
-        out = CO._pca_path(sf_dir)
+        out = artifact_path(sf_dir, "pca")
         with open(out, "w") as f:
             json.dump(
                 {
