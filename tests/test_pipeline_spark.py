@@ -1,6 +1,12 @@
 """Spark-level tests: the mapInPandas pipeline, distributed generation,
 plan shape (no shuffle on the hot path), and the driver entry contract."""
 
+import importlib
+import os
+import sys
+import zipfile
+import zipimport
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -45,7 +51,19 @@ def test_spark_output_matches_local(pipe_out):
         assert got == want
 
 
-def test_stages_take_empty_and_none_spans():
+@pytest.fixture
+def plain_zip_reread(monkeypatch):
+    """`zipimporter.invalidate_caches` as the stdlib ships it, with the
+    install flag cleared; both restored after the test."""
+    cls = zipimport.zipimporter
+    plain = getattr(cls.invalidate_caches, "__wrapped__",
+                    cls.invalidate_caches)
+    monkeypatch.setattr(cls, "invalidate_caches", plain)
+    monkeypatch.setattr(cls, "_stat_checked", False, raising=False)
+    return plain
+
+
+def test_stages_take_empty_and_none_spans(plain_zip_reread):
     """Every per-document stage accepts a missing (None) and an empty
     Arrow span array: one row per doc, no chunks, no error."""
     import numpy as np
@@ -69,6 +87,91 @@ def test_stages_take_empty_and_none_spans():
     assert diags["n_spans"] == 0 and doc["name"] == "x"
     assert len(doc["pages"]) == 1 and not doc["texts"]
     assert validate_doc(doc)["broken_tree"] == 0
+
+
+def _write_zip_pkg(archive, pkg, modules):
+    tmp = f"{archive}.tmp"
+    with zipfile.ZipFile(tmp, "w") as z:
+        z.writestr(f"{pkg}/__init__.py", "")
+        for m in modules:
+            z.writestr(f"{pkg}/{m}.py", f"NAME = {m!r}\n")
+    os.replace(tmp, archive)
+
+
+def test_zip_dirs_reread_only_when_archive_changes(
+        plain_zip_reread, tmp_path, monkeypatch):
+    from docling_core_spark import pipeline as P
+
+    pkg = "zipdir_pkg"
+    archive = str(tmp_path / "pkg.zip")
+    _write_zip_pkg(archive, pkg, ["mod_a"])
+    monkeypatch.syspath_prepend(archive)
+    for name in (pkg, f"{pkg}.mod_a", f"{pkg}.mod_b"):
+        monkeypatch.delitem(sys.modules, name, raising=False)
+    assert importlib.import_module(f"{pkg}.mod_a").NAME == "mod_a"
+
+    reads = []
+    read = zipimport._read_directory
+    monkeypatch.setattr(zipimport, "_read_directory",
+                        lambda a: reads.append(a) or read(a))
+    importlib.invalidate_caches()
+    assert reads.count(archive) == 2  # the archive's and the package's
+    P._stat_checked_zip_dirs()
+    reads.clear()
+    importlib.invalidate_caches()
+    importlib.invalidate_caches()
+    assert reads.count(archive) == 0
+
+    _write_zip_pkg(archive, pkg, ["mod_a", "mod_b"])
+    importlib.invalidate_caches()
+    assert reads.count(archive) == 2
+    assert importlib.import_module(f"{pkg}.mod_b").NAME == "mod_b"
+    reads.clear()
+    importlib.invalidate_caches()
+    assert reads.count(archive) == 0
+
+    os.remove(archive)
+    importlib.invalidate_caches()  # a deleted archive raises nothing
+    assert reads.count(archive) == 2
+
+
+def test_zip_dir_cache_installs_once(plain_zip_reread):
+    from docling_core_spark import pipeline as P
+
+    cls = zipimport.zipimporter
+    P._stat_checked_zip_dirs()
+    installed = cls.invalidate_caches
+    P._stat_checked_zip_dirs()
+    assert cls.invalidate_caches is installed
+    assert installed is not plain_zip_reread
+    assert installed.__wrapped__ is plain_zip_reread
+
+
+def test_zip_dir_cache_untouched_from_py313(plain_zip_reread, monkeypatch):
+    from docling_core_spark import pipeline as P
+
+    monkeypatch.setattr(sys, "version_info", (3, 13, 0))
+    P._stat_checked_zip_dirs()
+    assert zipimport.zipimporter.invalidate_caches is plain_zip_reread
+    assert not zipimport.zipimporter._stat_checked
+
+
+def test_per_doc_stages_install_zip_dir_cache(plain_zip_reread, monkeypatch):
+    """Every per-document stage body runs through `_per_doc`, which
+    installs the stat-checked re-read before its first batch."""
+    import pandas as pd
+
+    from docling_core_spark import pipeline as P
+
+    cls = zipimport.zipimporter
+    pdf = pd.DataFrame({"doc_id": ["shape:minimal"],
+                        "spans": [gen_spans("shape:minimal")]})
+    for stage in (P._process_batches, P._chunk_batches(True, 64)):
+        monkeypatch.setattr(cls, "invalidate_caches", plain_zip_reread)
+        monkeypatch.setattr(cls, "_stat_checked", False)
+        assert sum(len(f) for f in stage(iter([pdf]))) >= 1, stage
+        assert cls._stat_checked, stage
+        assert cls.invalidate_caches.__wrapped__ is plain_zip_reread, stage
 
 
 def test_hot_path_has_no_shuffle(spark):

@@ -18,14 +18,14 @@ import pytest
 
 from docling_core_spark.model.schema_gen import generate_docling_schema
 
-REF_SCHEMA_PATH = "/root/reference/docs/DoclingDocument.json"
-_MISSING = f"reference schema missing: {REF_SCHEMA_PATH}"
+from ref_oracle import REFERENCE_PATH, needs_path
+
+REF_SCHEMA_PATH = f"{REFERENCE_PATH}/docs/DoclingDocument.json"
+needs_ref_schema = needs_path(REF_SCHEMA_PATH)
 
 
 @pytest.fixture(scope="module")
 def ref_schema():
-    if not os.path.exists(REF_SCHEMA_PATH):
-        pytest.skip(_MISSING)
     with open(REF_SCHEMA_PATH) as f:
         return json.load(f)
 
@@ -76,19 +76,21 @@ def _def_shape(d: dict) -> dict:
     }
 
 
+@needs_ref_schema
 def test_defs_set_matches(ref_schema, our_schema):
     assert sorted(our_schema["$defs"]) == sorted(ref_schema["$defs"])
 
 
 def _def_names():
-    """The reference's $defs names, or one skipped case naming the
-    missing file."""
+    """The reference's $defs names, or one case that the test's
+    `needs_ref_schema` mark skips."""
     if not os.path.exists(REF_SCHEMA_PATH):
-        return [pytest.param(None, marks=pytest.mark.skip(reason=_MISSING))]
+        return [pytest.param(None, id="missing")]
     with open(REF_SCHEMA_PATH) as f:
         return sorted(json.load(f)["$defs"])
 
 
+@needs_ref_schema
 @pytest.mark.parametrize("name", _def_names())
 def test_def_structure_matches(name, ref_schema, our_schema):
     assert _def_shape(our_schema["$defs"][name]) == _def_shape(
@@ -96,6 +98,7 @@ def test_def_structure_matches(name, ref_schema, our_schema):
     ), name
 
 
+@needs_ref_schema
 def test_top_level_matches(ref_schema, our_schema):
     assert sorted(our_schema["properties"]) == sorted(
         ref_schema["properties"]
@@ -108,6 +111,7 @@ def test_top_level_matches(ref_schema, our_schema):
         ), name
 
 
+@needs_ref_schema
 def test_defaults_match_reference(ref_schema, our_schema):
     """Field defaults are behavior (what a loader materializes for
     absent fields) — compare them wherever the reference declares one."""

@@ -14,12 +14,18 @@ from docling_core_spark.model.schema_validate import (
     validate_schema,
 )
 
-from ref_oracle import install_reference, needs_path, needs_reference
+from ref_oracle import (
+    REFERENCE_PATH,
+    install_reference,
+    needs_path,
+    needs_reference,
+)
 
-SCHEMA_DIR = "/root/reference/docling_core/resources/schemas/doc"
+SCHEMA_DIR = f"{REFERENCE_PATH}/docling_core/resources/schemas/doc"
+LEGACY_DIR = f"{REFERENCE_PATH}/test/data/legacy_doc"
 FILES = sorted(
-    glob.glob("/root/reference/test/data/legacy_doc/doc-*.json")
-    + glob.glob("/root/reference/test/data/legacy_doc/error-*.json")
+    glob.glob(f"{LEGACY_DIR}/doc-*.json")
+    + glob.glob(f"{LEGACY_DIR}/error-*.json")
 )
 
 

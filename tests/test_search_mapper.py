@@ -13,9 +13,14 @@ from docling_core_spark.search.mapper import (
     replace_refs,
 )
 
-from ref_oracle import install_reference, needs_path, needs_reference
+from ref_oracle import (
+    REFERENCE_PATH,
+    install_reference,
+    needs_path,
+    needs_reference,
+)
 
-GOLDEN_DIR = "/root/reference/test/data/json_schemas"
+GOLDEN_DIR = f"{REFERENCE_PATH}/test/data/json_schemas"
 
 DOC_EXTRA = {
     "_meta": {
